@@ -36,6 +36,7 @@ from hiss_cube_spark.functions.spatial import grid_cell, grid_disc_cells
 from hiss_cube_spark.functions.timeparse import ts_to_mjd
 from hiss_cube_spark.operators.crossmatch import crossmatch
 from hiss_cube_spark.operators.timeseries import resample_locf
+from hiss_cube_spark.pins import pin, pin_narrow
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLE: dict[str, str] = {}
@@ -101,38 +102,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "props",
         ts_us.alias("ts_us"),
     ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-
-
-_PERSISTED: dict[str, DataFrame] = {}
-
-
-def _swap_persist(tag: str, df: DataFrame, ckpt: bool = False) -> DataFrame:
-    """Pin ``df``, releasing the pin a previous run of the same query left
-    behind — bench loops and repeated oracle runs otherwise accumulate
-    cached blocks in long-lived sessions (one live copy per tag, max).
-
-    ``ckpt=True`` pins via a LAZY ``localCheckpoint`` instead of
-    ``persist``: a cached plan's output partitioning is pinned pre-AQE
-    (``canChangeCachedPlanOutputPartitioning`` is off), so a persisted
-    stage table keeps its full shuffle width even when the data is tiny,
-    and every consumer re-scans the near-empty partitions; the checkpoint
-    stores the AQE-coalesced final plan instead (r14: cur_full_pipeline
-    −24%, dedup_eval_metrics −29% interleaved A/B). Use ``ckpt=False``
-    where the pin's FIRST action reads it through two plan branches
-    (e.g. a self-join of the pinned table) — a lazy checkpoint there
-    computes the partitions twice before the blocks exist (the
-    clusters.py "+30% tasks" hazard; dedup_simhash measured SLOWER with
-    the checkpoint pin for exactly this reason)."""
-    old = _PERSISTED.get(tag)
-    if old is not None:
-        try:
-            # a checkpointed pin's blocks belong to the internal RDD, not
-            # the plan cache — DataFrame.unpersist would be a no-op there
-            old._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            old.unpersist(False)
-    _PERSISTED[tag] = df.localCheckpoint(eager=False) if ckpt else df.persist()
-    return _PERSISTED[tag]
 
 
 def _bucketed_layout_dir(sf_dir: str, tag: str) -> str:
@@ -1505,15 +1474,11 @@ def ts_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     |hours| rows after the first aggregate — every later stage is
     constant-size regardless of corpus scale."""
     e = _events(spark, sf_dir)
-    b = (
-        e.groupBy(F.expr("ts_us DIV 3600000000").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        # |hours|-row series; every later stage re-references it —
-        # pinned so the corpus is scanned ONCE (the audit counted 8
-        # event scans from lazy re-derivation of this tiny table).
-        # LAZY (r13): consumers share the groupBy exchange below the
-        # pin; only the |hours|-row final-agg tail re-reads per branch
-        .localCheckpoint(eager=False)
+    # |hours|-row series; every later stage re-references it — pinned so
+    # the corpus is scanned ONCE (the audit counted 8 event scans from
+    # lazy re-derivation of this tiny table)
+    b = pin(
+        e.groupBy(F.expr("ts_us DIV 3600000000").alias("bucket")).agg(F.count(F.lit(1)).alias("n"))
     )
     w = Window.orderBy("bucket").rowsBetween(-11, 12)
     det = (
@@ -1598,15 +1563,11 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow aggregation + one ordered window + one regroup: linear scan
     cost at any scale, the series itself is |hours| rows."""
     e = _events(spark, sf_dir)
-    b = (
-        e.groupBy(F.expr("ts_us DIV 3600000000").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        # |hours|-row series; every later stage re-references it —
-        # pinned so the corpus is scanned ONCE (the audit counted 8
-        # event scans from lazy re-derivation of this tiny table).
-        # LAZY (r13): consumers share the groupBy exchange below the
-        # pin; only the |hours|-row final-agg tail re-reads per branch
-        .localCheckpoint(eager=False)
+    # |hours|-row series; every later stage re-references it — pinned so
+    # the corpus is scanned ONCE (the audit counted 8 event scans from
+    # lazy re-derivation of this tiny table)
+    b = pin(
+        e.groupBy(F.expr("ts_us DIV 3600000000").alias("bucket")).agg(F.count(F.lit(1)).alias("n"))
     )
     w = Window.orderBy("bucket").rowsBetween(-11, 12)
     tr = b.withColumn(
@@ -3028,7 +2989,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold); the chunk-banding self-join reads it from both sides and the 8
     # chunk expressions would each inline it via projection collapse —
     # persist the 16 B/doc table so the fold runs exactly once per document.
-    fps = _swap_persist("dedup_simhash:fps", simhash_fingerprints(d))
+    fps = simhash_fingerprints(d).persist()  # caller owns unpersist (clearCache)
     return simhash_pairs(fps, max_hamming=7, n_chunks=8)
 
 
@@ -3066,7 +3027,7 @@ def dedup_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix_filter=True,
     )
     pred = simhash_pairs(
-        _swap_persist("dedup_eval:fps", simhash_fingerprints(d), ckpt=True),
+        pin(simhash_fingerprints(d), tag="dedup_eval:fps"),
         max_hamming=7,
         n_chunks=8,
     )
@@ -5779,12 +5740,13 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     firsts = toks.groupBy("token").agg(F.min("doc_id").alias("first_doc"))
     mx = d.agg(F.max("doc_id").alias("mx"))
-    cp = (
+    # 10 rows; referenced by two joins — without the pin each reference
+    # re-scans documents for mx
+    cp = pin(
         spark.range(1, 11)
         .crossJoin(F.broadcast(mx))
-        .select(F.expr("(id * mx) DIV 10").alias("checkpoint"))
-        .localCheckpoint(eager=True)  # 10 rows; referenced by two joins —
-        # without materialization each reference re-scans documents for mx
+        .select(F.expr("(id * mx) DIV 10").alias("checkpoint")),
+        eager=True,
     )
     # broadcast the 10-row checkpoint list, never the vocabulary
     vocab = (
@@ -6427,11 +6389,7 @@ def w_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)
     # bounded (user, active-day) table pinned once: span/cover/dau each
     # re-derived it lazily = 3 events scans (r9 scan-audit catch)
-    # LAZY (r13): the distinct's exchange is shared; per-branch tail is
-    # the bounded (user, day) final agg only
-    ad = e.select(
-        "user_id", F.expr("ts_us DIV 86400000000").alias("day")
-    ).distinct().localCheckpoint(eager=False)
+    ad = pin(e.select("user_id", F.expr("ts_us DIV 86400000000").alias("day")).distinct())
     span = ad.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     days = span.select(
         F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("day")
@@ -7501,17 +7459,14 @@ def j_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     def day(c):
         return F.floor(F.unix_timestamp(c) / F.lit(86400)).cast("long")
 
-    iv = (
+    # pin the (small) interval table once — both self-join sides replan
+    # the lineitem scan+aggregation otherwise (no exchange reuse)
+    iv = pin(
         li.select(
             "l_suppkey", F.year("l_shipdate").alias("yr"), day(F.col("l_shipdate")).alias("_d")
         )
         .groupBy("l_suppkey", "yr")
         .agg(F.min("_d").alias("lo"), (F.min("_d") + F.lit(6)).alias("hi"))
-        # pin the (small) interval table once — both self-join sides
-        # replan the lineitem scan+aggregation otherwise (no exchange
-        # reuse). LAZY (r13): the sides share the groupBy exchange; the
-        # per-branch tail is the per-(supplier, yr) final agg only
-        .localCheckpoint(eager=False)
     )
     a = iv.select(F.col("l_suppkey").alias("supp_a"), "yr", F.col("lo").alias("lo_a"), F.col("hi").alias("hi_a"))
     b = iv.select(F.col("l_suppkey").alias("supp_b"), "yr", F.col("lo").alias("lo_b"), F.col("hi").alias("hi_b"))
@@ -8452,19 +8407,15 @@ def w_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count — materialize them (one row per user, tiny vs the log) so the
     # event log is scanned once per stage, as the docstring promises
     # (lazily the audit counted 6 scans: p re-derived c re-derived v)
-    v = (
-        e.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("u1"))
-        .localCheckpoint(eager=False)  # LAZY r13: shared exchange below
+    v = pin(
+        e.where(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts_us").alias("u1"))
     )
-    c = (
+    c = pin(
         e.where(F.col("event_type") == "click")
         .join(F.broadcast(v), "user_id")
         .where((F.col("ts_us") > F.col("u1")) & (F.col("ts_us") <= F.col("u1") + week))
         .groupBy("user_id", "u1")
         .agg(F.min("ts_us").alias("u2"))
-        .localCheckpoint(eager=False)  # LAZY r13: shared exchange below
     )
     p = (
         e.where(F.col("event_type") == "purchase")
@@ -8835,9 +8786,9 @@ def cur_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = _t(spark, sf_dir, "documents")
     q = quality_filter(raw).where("keep").select("doc_id")
-    s1 = _swap_persist("pipe_s1", raw.join(q, "doc_id"), ckpt=True)
+    s1 = pin(raw.join(q, "doc_id"), tag="pipe_s1")
     ex = exact_dedup(s1).select(F.col("canonical_id").alias("doc_id"))
-    s2 = _swap_persist("pipe_s2", raw.join(ex, "doc_id"), ckpt=True)
+    s2 = pin(raw.join(ex, "doc_id"), tag="pipe_s2")
     pairs = ngram_jaccard_pairs(s2, threshold=0.8, n=3, prefix_filter=True)
     test = raw.where(F.col("doc_id") % 10 == 0)
     # The benchmark gram set depends only on the raw test split, not on
@@ -8846,14 +8797,10 @@ def cur_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decontaminate() with the precomputed set is byte-identical.
     with ThreadPoolExecutor(max_workers=1) as pool:
         grams = pool.submit(collect_decontaminate_grams, test, "text", 5)
-        s3 = _swap_persist("pipe_s3", resolve_duplicates(s2, pairs), ckpt=True)
+        s3 = pin(resolve_duplicates(s2, pairs), tag="pipe_s3")
         test_grams = grams.result()
     train = s3.where(F.col("doc_id") % 10 != 0)
-    s4 = _swap_persist(
-        "pipe_s4",
-        decontaminate(train, test, n=5, test_grams=test_grams),
-        ckpt=True,
-    )
+    s4 = pin(decontaminate(train, test, n=5, test_grams=test_grams), tag="pipe_s4")
     s5 = domain_cap(
         s4.withColumn("url", F.concat(F.lit("http://"), F.col("source"))),
         "url",
@@ -9232,9 +9179,7 @@ def stream_neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hiss_cube_spark.operators.dedup import minhash_features, sig_agreement
 
     d = _t(spark, sf_dir, "documents").where(F.size(F.split("text", " ")) >= 3)
-    feats = minhash_features(d.select("doc_id", "text")).localCheckpoint(
-        eager=True
-    )
+    feats = pin(minhash_features(d.select("doc_id", "text")), eager=True)
     bb = feats.select("doc_id", F.posexplode("bands").alias("band_id", "band_hash"))
     a, b = bb.alias("a"), bb.alias("b")
     cand = (
@@ -9249,21 +9194,14 @@ def stream_neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = feats.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
     sb = feats.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
-    # EAGER checkpoint on purpose: the first consumer is cc0, whose
-    # symmetrizing union reads this table through TWO branches of one
-    # action — a lazy checkpoint there would compute the band join +
-    # signature verify twice before the blocks exist (the clusters.py
-    # "+30% tasks" hazard), so the one extra driver action is the
-    # cheaper side of the trade.
-    from hiss_cube_spark.operators.clusters import _coalesce_checkpointed
-
-    pairs = _coalesce_checkpointed(
+    # the first consumer is cc0, whose symmetrizing union reads this
+    # table through TWO branches of one action
+    pairs = pin_narrow(
         F.broadcast(cand)
         .join(sa, "doc_a")
         .join(sb, "doc_b")
         .where(sig_agreement(F.col("_sa"), F.col("_sb")) >= F.lit(0.5))
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
     even = (F.col("doc_a") % 2 == 0) & (F.col("doc_b") % 2 == 0)
     cc0 = connected_components(pairs.where(even), edges_materialized=True)
@@ -10890,9 +10828,8 @@ def _caption_retrieval_corpus(
         if with_audio
         else "doc_id long, img binary, caption string"
     )
-    return d.mapInPandas(_synth, schema=schema).localCheckpoint(
-        eager=True
-    )  # ≤120 rows; every fingerprint leg reuses
+    # ≤120 rows; every fingerprint leg reuses
+    return pin(d.mapInPandas(_synth, schema=schema), eager=True)
 
 
 @_q(
@@ -11131,19 +11068,16 @@ def dq_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                  "cast(length(bin(cents)) - 1 AS INT))")
         - F.lit(16)
     )
-    gs = (
+    # Without the pin Catalyst pushes each slice's grouping-id filter
+    # below the aggregate, cloning the whole scan+Expand subtree per slice
+    # (2 fact scans again). The pin makes the aggregate ONE physical
+    # subtree — the scan and its exchange run once; only the ≤ ~1k-row
+    # final-agg tail is evaluated per consuming branch.
+    gs = pin(
         li.where(F.col("cents") > 0)
         .select("src", bucket.cast("long").alias("bucket"))
         .groupingSets([["src", "bucket"], ["bucket"]], "src", "bucket")
         .agg(F.count(F.lit(1)).alias("n"), F.grouping_id().alias("_gid"))
-        # LAZY checkpoint: without it Catalyst pushes each slice's
-        # grouping-id filter below the aggregate, cloning the whole
-        # scan+Expand subtree per slice (2 fact scans again). The
-        # checkpoint makes the aggregate ONE physical subtree — the
-        # scan and its exchange run once; only the ≤ ~1k-row final-agg
-        # tail is evaluated per consuming branch. Lazy, not eager: the
-        # bench action materializes it, no extra driver job.
-        .localCheckpoint(eager=False)
     )
     per = gs.where(F.col("_gid") == 0).select("src", "bucket", "n")
     merged = per.groupBy("bucket").agg(F.sum("n").alias("merged_n"))
@@ -11402,17 +11336,9 @@ def _source_gram_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gram"),
         )
     )
-    # LAZY pin (r13): both consumers (sketch leg + exact companion)
-    # share everything below the final (source, h) distinct's exchange;
-    # only that bounded final-agg tail is evaluated per branch, and the
-    # eager variant's dedicated driver action disappears into the
-    # query's own job
-    return (
-        grams.distinct()
-        .select("source", kmv_hash("gram").alias("h"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # both consumers (sketch leg + exact companion) share everything
+    # below the final (source, h) distinct's exchange
+    return pin(grams.distinct().select("source", kmv_hash("gram").alias("h")).distinct())
 
 
 @_q(

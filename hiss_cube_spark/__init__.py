@@ -15,7 +15,8 @@ physical plan; Python kernels only where built-ins genuinely can't express
 the semantics (FITS decode, HEALPix math), and then always Arrow-batched.
 """
 
-from hiss_cube_spark.session import get_spark, release_rdd_blocks
+from hiss_cube_spark.pins import release_rdd_blocks
+from hiss_cube_spark.session import get_spark
 
 __all__ = ["get_spark", "release_rdd_blocks"]
 __version__ = "0.1.0"

@@ -13,7 +13,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
+from pyspark.sql.types import FloatType
 
 _DROP_BITS = 13  # keep 10 significant bits of the 23-bit mantissa
 
@@ -31,20 +31,6 @@ def float_compress(col: Column, drop_bits: int = _DROP_BITS) -> Column:
     @F.pandas_udf(FloatType())
     def _udf(s: pd.Series) -> pd.Series:
         return pd.Series(float_compress_np(s.to_numpy(dtype=np.float32), drop_bits))
-
-    return _udf(col)
-
-
-def float_compress_array(col: Column, drop_bits: int = _DROP_BITS) -> Column:
-    """Array form: array<float> → array<float>."""
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _udf(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda arr: None
-            if arr is None
-            else float_compress_np(np.asarray(arr, dtype=np.float32), drop_bits).tolist()
-        )
 
     return _udf(col)
 

@@ -40,14 +40,3 @@ def ivw_components(flux: Column, sigma: Column) -> tuple[Column, Column]:
     w = F.when(valid, F.lit(1.0) / (sigma * sigma))
     fw = F.when(valid, flux) * w
     return fw, w
-
-
-def ivw_mean_sigma(flux: Column, sigma: Column) -> tuple[Column, Column]:
-    """Aggregate expressions: (weighted mean, combined sigma).
-
-    ``mean = Σ(f/σ²)/Σ(1/σ²)``, ``σ_out = sqrt(1/Σ(1/σ²))``
-    (ref metadata_strategy_cube_ml.py:26-37). Use inside ``.agg``.
-    """
-    fw, w = ivw_components(flux, sigma)
-    sw = F.sum(w)
-    return F.sum(fw) / sw, F.sqrt(F.lit(1.0) / sw)

@@ -227,19 +227,6 @@ def _pix2ang_nest_np(pix: np.ndarray, nside: int) -> tuple[np.ndarray, np.ndarra
     return ra, dec
 
 
-def healpix_pix2ang_nest(pix: Column, order: int) -> Column:
-    """Pixel-center (ra, dec) struct for nested ids at ``order`` — the
-    healpy.pix2ang(nest=True, lonlat=True) analog (pandas UDF)."""
-    nside = 1 << order
-
-    @F.pandas_udf("ra double, dec double")
-    def _udf(p_s: pd.Series) -> pd.DataFrame:
-        ra, dec = _pix2ang_nest_np(p_s.to_numpy(), nside)
-        return pd.DataFrame({"ra": ra, "dec": dec})
-
-    return _udf(pix)
-
-
 def healpix_ang2pix_nest(ra: Column, dec: Column, order: int) -> Column:
     """Nested HEALPix pixel id at ``order`` (nside = 2**order), pandas UDF.
 

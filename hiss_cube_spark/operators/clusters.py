@@ -17,9 +17,9 @@ carries the component's min id. Per iteration this is one shuffle join
 no driver-side graph state, so it scales to edge lists that don't fit on
 one machine. Iteration count is the graph diameter; near-dup graphs are
 overwhelmingly tiny cliques and short chains (diameter ≤ 3), so 2-4 rounds
-converge. Lineage is cut with an eager localCheckpoint every round —
-without it the plan doubles per iteration and py4j plan-build time blows up
-long before the data does.
+converge. Lineage is cut with a pin every round — without it the plan
+doubles per iteration and py4j plan-build time blows up long before the
+data does.
 """
 
 from __future__ import annotations
@@ -27,52 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hiss_cube_spark.pins import pin, pin_narrow, release
+
 __all__ = [
     "connected_components",
     "resolve_duplicates",
     "resolve_duplicates_best",
     "golden_records",
 ]
-
-# Per-partition byte target when right-sizing a materialized edge list for
-# the iterative rounds (guide §2.2: fewer, larger partitions — an iterative
-# loop re-scans its working set every round, so near-empty partitions pay
-# their task overhead D times).
-_EDGE_PARTITION_BYTES = 32 << 20
-
-
-def _coalesce_checkpointed(
-    df: DataFrame, target_bytes: int = _EDGE_PARTITION_BYTES
-) -> DataFrame:
-    """Narrow-coalesce an eagerly ``localCheckpoint``-ed DataFrame to a
-    data-proportional partition count.
-
-    A checkpointed edge/pair table inherits the partitioning of the plan
-    that PRODUCED it (e.g. the 1-partition-per-core fan-out that spreads
-    the shingle compute), but the result is usually orders of magnitude
-    smaller than the corpus — near-dup pairs are rare — so every iterative
-    round downstream would re-scan dozens of near-empty partitions per
-    job, D times. The blocks are already materialized, so ``coalesce`` is
-    a NARROW merge of block reads: upstream parallelism (already spent) is
-    unaffected, no shuffle is added, and the count is derived from the
-    MEASURED cached bytes (storage-registry lookup, no extra action) —
-    one partition per ``target_bytes``, so a genuinely large edge list at
-    cluster scale keeps its width. No-op when the size cannot be read
-    (plan is not a bare checkpoint scan) or the table is already narrow.
-    """
-    try:
-        rid = df._jdf.queryExecution().analyzed().rdd().id()
-        sc = df.sparkSession.sparkContext
-        for info in sc._jsc.sc().getRDDStorageInfo():
-            if info.id() == rid:
-                size = info.memSize() + info.diskSize()
-                cur = info.numCachedPartitions()
-                n = int(max(1, min(cur, -(-size // target_bytes))))
-                return df.coalesce(n) if n < cur else df
-    except Exception:
-        pass
-    return df
-
 
 def connected_components(
     pairs: DataFrame,
@@ -92,20 +54,18 @@ def connected_components(
     directions of every edge (e.g. DBSCAN's eps-graph), skipping the
     symmetrizing union.
 
-    Per-round driver latency is ONE action: the round's label table carries
-    a lazy localCheckpoint and the convergence probe is a full (non-limited)
-    filtered ``count()`` over it — the count's scan is what materializes
-    every checkpoint partition (a ``limit(1)`` probe would short-circuit
-    and leave partitions uncomputed behind a truncated lineage), so the
-    old eager-checkpoint-then-count pair of cluster round-trips collapses
-    into one. The initial labels stay EAGER: they are read by two consumers
-    inside round 1's action, and a lazy persist there lets the two stages
-    race and compute the same partitions twice (measured: +30% tasks at
-    sf0.1) — duplicate work that would be a real cost at scale. ``edges``
-    is a LAZY checkpoint whose only consumer in its materializing action is
-    the init-labels groupBy, so init folds the edge materialization into
-    its own action (one driver round-trip fewer); every later round reads
-    the checkpointed blocks.
+    Per-round driver latency is ONE action: the round's label table is a
+    lazy pin and the convergence probe is a full (non-limited) filtered
+    ``count()`` over it — the count's scan is what materializes every
+    pinned partition (a ``limit(1)`` probe would short-circuit and leave
+    partitions uncomputed behind a truncated lineage). Once the count has
+    run, the previous round's label pin is superseded and released; the
+    edge pins are released on return, so only the result's pin stays.
+    The initial labels are an eager pin: round 1's action reads them
+    through two branches. ``edges`` is a lazy pin whose only consumer in
+    its materializing action is the init-labels groupBy, so init folds the
+    edge materialization into its own action; every later round reads the
+    pinned blocks.
 
     The edge list is deliberately NOT deduplicated: min-label propagation
     is idempotent under duplicate edges (every aggregate here is a MIN),
@@ -115,7 +75,7 @@ def connected_components(
 
     ``edges_materialized=True`` declares that ``pairs`` is already cheap
     to re-read (checkpointed / persisted blocks or a trivial derivation
-    of them). Otherwise the directed edge list is eagerly checkpointed
+    of them). Otherwise the directed edge list is pinned (eager, narrow)
     BEFORE the symmetrizing union: the union reads its input through two
     branches of one action, which would compute the caller's pair plan
     twice (measured 1.5-2x on the AllPairs-verify plan feeding
@@ -123,24 +83,24 @@ def connected_components(
     compute).
     """
     edges = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    made = []
     if not symmetric:
         if not edges_materialized:
-            # right-size the materialized pair list before the rounds:
-            # it inherits the corpus fan-out's partitioning but is tiny
-            # relative to it, and every round below re-scans it
-            edges = _coalesce_checkpointed(edges.localCheckpoint(eager=True))
+            edges = pin_narrow(edges)
+            made.append(edges)
         # Undirected: propagate along both directions of every edge.
         edges = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges)
+    made.append(edges)
 
     # Initial labels = min(self, direct neighbors): identical to one
     # propagation round from identity labels, but a single map-side-combining
     # groupBy with no join (every node appears as `a` after symmetrization).
-    labels = (
+    labels = pinned = pin(
         edges.groupBy("a")
         .agg(F.min("b").alias("_nb"))
-        .select(F.col("a").alias("node"), F.least("a", "_nb").alias("label"))
-        .localCheckpoint(eager=True)
+        .select(F.col("a").alias("node"), F.least("a", "_nb").alias("label")),
+        eager=True,
     )
     label_type = labels.schema["label"].dataType
 
@@ -154,16 +114,19 @@ def connected_components(
         # (only the node's own row has _prev set, and every node has one),
         # so convergence detection below is a narrow scan of the
         # checkpointed result — no second join, no second shuffle.
-        new_labels = (
+        new_labels = pin(
             labels.withColumn("_prev", F.col("label"))
             .unionByName(neighbor_min)
             .groupBy("node")
             .agg(F.min("label").alias("label"), F.max("_prev").alias("_prev"))
-            .localCheckpoint(eager=False)
         )
         changed = new_labels.where(F.col("label") < F.col("_prev")).count()
+        release(pinned)
+        pinned = new_labels
         labels = new_labels.select("node", "label")
         if changed == 0:
+            for df in made:
+                release(df)
             return labels.select("node", F.col("label").alias("cluster_id"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 
@@ -270,15 +233,14 @@ def golden_records(
     need = {id_col, *mode_cols, *max_cols}
     if canon_col:
         need.add(canon_col)
-    # EAGER when mode columns exist: the final action then reads members
-    # through 1 + len(mode_cols) subtrees, and a lazy checkpoint lets the
-    # racing subtrees compute the member join once each before blocks
-    # appear (the clusters.py "+30% tasks" hazard); with no mode columns
-    # the single consumer materializes it lazily for free.
-    members = cc.join(
-        df.select(*[F.col(c).alias("node" if c == id_col else c) for c in need]),
-        "node",
-    ).localCheckpoint(eager=bool(mode_cols))
+    # the final action reads members through 1 + len(mode_cols) subtrees
+    members = pin(
+        cc.join(
+            df.select(*[F.col(c).alias("node" if c == id_col else c) for c in need]),
+            "node",
+        ),
+        eager=bool(mode_cols),
+    )
 
     agg = [F.count(F.lit(1)).cast("long").alias("n_members")] + [
         F.max(c).alias(f"max_{c}") for c in max_cols

@@ -20,6 +20,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from hiss_cube_spark.operators.text_analysis import tokenize
+from hiss_cube_spark.pins import pin
 
 __all__ = [
     "BenchmarkBudgetExceeded",
@@ -357,7 +358,7 @@ def embedding_decontaminate(
     fires from bounded driver memory): a call that aims ``test`` at a
     large corpus raises :class:`BenchmarkBudgetExceeded` instead of
     OOMing the driver. Each call ``unpersist``s the PREVIOUS call's
-    benchmark broadcast (the `_swap_persist` precedent), so repeated
+    benchmark broadcast, so repeated
     calls don't accumulate executor copies; a DataFrame returned by an
     earlier call stays valid — its tasks re-fetch the broadcast from the
     driver on next use (unpersist removes executor blocks, not the
@@ -887,12 +888,12 @@ def incremental_neardup(
         bands=bands,
         seed=seed,
     )
-    # Eager lineage cut, not a persist: the 128-constant signature
-    # expression would otherwise sit in EVERY downstream plan (4 branches x
-    # the CC rounds' checkpoints x broadcast collects), and re-analyzing it
-    # per action costs seconds of driver time — measured 18 s -> ~3 s for
-    # one batch at sf0.1. Same discipline as connected_components.
-    feats = feats.localCheckpoint(eager=True)
+    # A lineage cut, not a persist: the 128-constant signature expression
+    # would otherwise sit in EVERY downstream plan (4 branches x the CC
+    # rounds' pins x broadcast collects), and re-analyzing it per action
+    # costs seconds of driver time — measured 18 s -> ~3 s for one batch
+    # at sf0.1.
+    feats = pin(feats, eager=True)
 
     bb = feats.select(
         "doc_id", F.posexplode("bands").alias("band_id", "band_hash")

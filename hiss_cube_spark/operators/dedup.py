@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hiss_cube_spark.pins import pin
+
 __all__ = [
     "exact_dedup",
     "remove_duplicated_spans",
@@ -148,7 +150,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     max_gram_freq: int | None = None,
-    persist_shingles: bool = True,
     doc_partitions: int | None = None,
     prefix_filter: bool = False,
     df_order: bool = False,
@@ -187,8 +188,7 @@ def ngram_jaccard_pairs(
     a checkpointed intermediate table).
     """
     ga = document_grams(df, text_col, id_col, n, doc_partitions)
-    if persist_shingles:
-        ga = ga.persist()  # multiple plan subtrees; caller owns unpersist via spark.catalog
+    ga = ga.persist()  # multiple plan subtrees; caller owns unpersist via spark.catalog
     sh = ga.select("doc_id", F.explode("grams").alias("gram"))
     if max_gram_freq is not None:
         # hot-gram drop changes the effective shingle sets, so sizes and
@@ -289,7 +289,6 @@ def containment_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist_shingles: bool = True,
     doc_partitions: int | None = None,
     broadcast_candidates: bool = True,
 ) -> DataFrame:
@@ -312,8 +311,7 @@ def containment_pairs(
     joins shuffle by doc id.
     """
     ga = document_grams(df, text_col, id_col, n, doc_partitions)
-    if persist_shingles:
-        ga = ga.persist()
+    ga = ga.persist()
 
     sz = F.size("grams")
     plen = (sz - F.ceil(F.lit(threshold) * sz) + 1).cast("int")
@@ -492,7 +490,6 @@ def minhash_lsh_pairs(
     n_hashes: int = 128,
     bands: int = 32,
     seed: int = 42,
-    persist_shingles: bool = True,
     doc_partitions: int | None = None,
     broadcast_candidates: bool = True,
 ) -> DataFrame:
@@ -514,8 +511,7 @@ def minhash_lsh_pairs(
     ga = document_grams(df, text_col, id_col, n, doc_partitions).withColumn(
         "_hs", F.expr(f"transform(grams, g -> abs(xxhash64(g)) % {_MERSENNE}L)")
     )
-    if persist_shingles:
-        ga = ga.persist()  # caller owns unpersist (spark.catalog.clearCache)
+    ga = ga.persist()  # caller owns unpersist (spark.catalog.clearCache)
 
     # Signature + band hashes in ONE SQL expression, for two reasons:
     # (1) driver cost — building n_hashes Column trees through py4j lambdas
@@ -544,8 +540,7 @@ def minhash_lsh_pairs(
     # the leg most sensitive to host contention (PLANS.md round-12) — runs
     # once per join side. The pin makes it exactly once per document.
     sigs = ga.select("doc_id", F.expr(bands_sql).alias("_bands"))
-    if persist_shingles:
-        sigs = sigs.persist()
+    sigs = sigs.persist()
     band = sigs.select(
         "doc_id",
         F.posexplode("_bands").alias("band_id", "band_hash"),
@@ -1023,19 +1018,15 @@ def source_overlap_matrix(
     # ONE corpus scan: groupBy(gram) → source set (collect_set dedupes
     # map-side; no pre-`.distinct()` exchange needed), then BOTH legs —
     # per-source sizes and the pair matrix — derive from the pinned
-    # per-gram table. The checkpoint is sized by DISTINCT grams (8-byte
+    # per-gram table. The pin is sized by DISTINCT grams (8-byte
     # hashes + ≤|sources| labels), far smaller than the corpus, and the
     # alternative (sizes and pairs each re-deriving the shingle scan)
     # reads the full document corpus twice — at 100 TB the extra scan
     # dwarfs the gram-table materialization. Profiled at sf0.1: the
     # shingle explode itself is the floor (~1.3 s/scan); 2-scan = 3.5 s,
     # 1-scan = ~2 s.
-    pergram = (
-        grams.groupBy("gram")
-        .agg(F.sort_array(F.collect_set(source_col)).alias("srcs"))
-        # LAZY (r13): both consumers share the groupBy exchange below
-        # the pin; only the gram-domain final agg re-reads per branch
-        .localCheckpoint(eager=False)
+    pergram = pin(
+        grams.groupBy("gram").agg(F.sort_array(F.collect_set(source_col)).alias("srcs"))
     )
     sizes = pergram.select(F.explode("srcs").alias(source_col)).groupBy(
         source_col

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hiss_cube_spark.pins import pin
+
 __all__ = ["ab_cuped", "ab_srm"]
 
 # Shared arm-assignment hash (ab_cuped and ab_srm MUST agree — SRM guards
@@ -97,13 +99,13 @@ def ab_cuped(
 
     mx = _floor_mean("x").cast("long")
     my = _floor_mean("y").cast("long")
-    per = per.select(
-        "u", "x", "y",
-        (F.col("x") - mx).alias("dx"),
-        (F.col("y") - my).alias("dy"),
-    ).localCheckpoint(eager=False)  # per-user table: bounded, reused 2×
-    # (LAZY r13: the global-window stage below the pin is shared; the
-    # bounded per-user tail re-evaluates per consumer)
+    per = pin(  # per-user table: bounded, reused 2×
+        per.select(
+            "u", "x", "y",
+            (F.col("x") - mx).alias("dx"),
+            (F.col("y") - my).alias("dy"),
+        )
+    )
 
     d38 = "decimal(38,0)"
     th = per.agg(

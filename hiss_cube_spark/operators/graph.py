@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hiss_cube_spark.pins import pin, pin_narrow
+
 __all__ = ["pagerank", "triangle_count", "bfs_hops", "label_propagation"]
 
 
@@ -48,14 +50,12 @@ def pagerank(
     the unrolled SQL oracle). Returns ``(node, rank)`` with ``rank``
     rounded to ``scale`` decimals.
     """
-    # materialize the deduped edge list ONCE: nodes, outdegrees, and every
+    # pin the deduped edge list ONCE: nodes, outdegrees, and every
     # iteration re-reference it, and the caller's edge definition may be a
-    # multi-table join — without the checkpoint the audit counted 14 fact
+    # multi-table join — without the pin the audit counted 14 fact
     # scans for 3 iterations (iterative lineage re-derivation)
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)  # LAZY r13: shared distinct below
+    e = pin(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -83,20 +83,19 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("contrib").alias("mass"))
         )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            F.round(
-                F.lit(base)
-                + F.lit(damping)
-                * F.coalesce(F.col("mass").cast("double"), F.lit(0.0)),
-                scale,
-            ).alias("rank"),
-        # truncate the iteration's lineage (the connected-components
-        # precedent): without this each round's plan embeds every prior
-        # round's joins. Lazy: each round's table has exactly one consumer
-        # (the next round's contrib join, or the caller's action), which
-        # materializes it — eager only added a driver round-trip per round.
-        ).localCheckpoint(eager=False)
+        # truncate the iteration's lineage: without this each round's
+        # plan embeds every prior round's joins
+        ranks = pin(
+            nodes.join(contrib, "node", "left").select(
+                "node",
+                F.round(
+                    F.lit(base)
+                    + F.lit(damping)
+                    * F.coalesce(F.col("mass").cast("double"), F.lit(0.0)),
+                    scale,
+                ).alias("rank"),
+            )
+        )
     return ranks
 
 
@@ -123,15 +122,13 @@ def triangle_count(
     aggregation + join. Use it when the graph has power-law hubs (web
     domains, citation graphs); the oracle pins the id variant.
     """
-    # materialize the directed list before the symmetrizing union (and,
-    # under degree orientation, the degree aggregate) — each consumer
-    # branch would otherwise re-run the caller's whole edge derivation
-    from .clusters import _coalesce_checkpointed
-
-    e = _coalesce_checkpointed(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col(src) != F.col(dst))
-        .localCheckpoint(eager=True)
+    # pin the directed list before the symmetrizing union (and, under
+    # degree orientation, the degree aggregate) — each consumer branch
+    # would otherwise re-run the caller's whole edge derivation
+    e = pin_narrow(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
+            F.col(src) != F.col(dst)
+        )
     )
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     if orient == "degree":
@@ -150,10 +147,10 @@ def triangle_count(
     else:
         ranked = und.where(F.col("a") < F.col("b"))
     # the oriented edge list is referenced by all three wedge legs —
-    # materialize it once (it IS the algorithm's working set) or the
-    # whole upstream edge derivation re-executes per leg (6 fact-table
-    # scans for a 4-table edge definition)
-    ranked = _coalesce_checkpointed(ranked.localCheckpoint(eager=True))
+    # pin it (it IS the algorithm's working set) or the whole upstream
+    # edge derivation re-executes per leg (6 fact-table scans for a
+    # 4-table edge definition)
+    ranked = pin_narrow(ranked)
     w1 = ranked.select(F.col("a").alias("x"), F.col("b").alias("y"))
     w2 = ranked.select(F.col("a").alias("y"), F.col("b").alias("z"))
     w3 = ranked.select(F.col("a").alias("x"), F.col("b").alias("z"))
@@ -228,39 +225,27 @@ def label_propagation(
     neighbor key), one map-side-combining (node, label) count, one
     per-node argmax window over that bounded count table — the same
     per-round cost envelope as `connected_components`, with the same
-    eager localCheckpoint lineage cut per round.
+    pinned lineage cut per round.
 
     Returns ``(node, community)``.
     """
     from pyspark.sql.window import Window
 
-    # Materialize the directed list once before symmetrizing: the union
-    # reads its input through two branches of one action, which would
-    # compute the caller's edge plan twice (the connected_components
-    # pre-checkpoint rationale — one extra driver action for half the
-    # edge-derivation compute).
-    from .clusters import _coalesce_checkpointed
-
-    de = _coalesce_checkpointed(
-        edges.select(
-            F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-        ).localCheckpoint(eager=True)
-    )
-    und = (
+    # Pin the directed list once before symmetrizing: the union reads
+    # its input through two branches of one action, which would compute
+    # the caller's edge plan twice.
+    de = pin_narrow(edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")))
+    und = pin(
         de.union(de.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .where(F.col("a") != F.col("b"))
         .distinct()
-        # LAZY (r13): the distinct's exchange is shared by the label
-        # init and every propagation round; tail is the deduped edge
-        # final agg only
-        .localCheckpoint(eager=False)
     )
     labels = und.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     w = Window.partitionBy("node").orderBy(F.desc("_n"), F.asc("label"))
     for _ in range(iterations):
-        labels = (
+        labels = pin(
             und.join(labels.withColumnRenamed("node", "b"), "b")
             .select(F.col("a").alias("node"), "label")
             .groupBy("node", "label")
@@ -268,8 +253,5 @@ def label_propagation(
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("node", "label")
-            # lazy: single consumer per round (next round's join / the
-            # caller's action) materializes it — the pagerank precedent
-            .localCheckpoint(eager=False)
         )
     return labels.select("node", F.col("label").alias("community"))

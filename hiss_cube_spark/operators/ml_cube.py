@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from hiss_cube_spark.operators.cutouts import dereference_cutouts
 from hiss_cube_spark.operators.ivw import ivw_aggregate_arrays
+from hiss_cube_spark.pins import pin
 
 __all__ = ["assign_targets", "ml_cube_spectra", "ml_cube_images", "build_ml_cube"]
 
@@ -105,7 +106,7 @@ def build_ml_cube(
     refs: DataFrame,
     images: DataFrame,
     n_bands: int = 5,
-    materialize=None,
+    materialize: bool = False,
     tiles: DataFrame | None = None,
     tile: int = 256,
 ) -> tuple[DataFrame, DataFrame]:
@@ -113,18 +114,19 @@ def build_ml_cube(
     (P7; ref cube_ml.py:260-262: a target counts only with cutouts in all
     5 filters).
 
-    ``materialize`` (optional, ``DataFrame -> DataFrame``): applied to the
-    cutout table BEFORE the completeness filter. Both returned cubes
-    derive from that table — the completeness set feeds the spectra cube
-    too — so a consumer running MORE THAN ONE action over the pair (the
-    pipeline writes two tables) re-executes the full-frame scan per
-    action unless it pins the table first (lazy re-derivation; see the
-    round-5 scan audit). Single-action consumers (the flagship query)
-    should leave it None — an eager pin would only add a pass there."""
+    ``materialize=True`` eagerly pins the cutout table BEFORE the
+    completeness filter. Both returned cubes derive from that table — the
+    completeness set feeds the spectra cube too — so a consumer running
+    MORE THAN ONE action over the pair (the pipeline writes two tables)
+    re-executes the full-frame scan per action unless the table is pinned
+    (lazy re-derivation; see the round-5 scan audit). Single-action
+    consumers (the flagship query) should leave it off — an eager pin
+    would only add a pass there. The pin is the caller's to release
+    (``pins.scope``)."""
     targeted = assign_targets(spectra) if "target_id" not in spectra.columns else spectra
     img_cube = ml_cube_images(refs, images, targeted, tiles=tiles, tile=tile)
-    if materialize is not None:
-        img_cube = materialize(img_cube)
+    if materialize:
+        img_cube = pin(img_cube, eager=True)
     complete = (
         img_cube.where(F.col("zoom") == 0)
         .groupBy("target_id")

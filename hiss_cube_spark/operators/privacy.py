@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hiss_cube_spark.pins import pin
+
 __all__ = [
     "PII_PATTERNS",
     "redact_pii",
@@ -110,14 +112,12 @@ def k_anonymity_ladder(
     the chosen level).
     """
     depth = len(hierarchy)
-    sizes = (
-        df.rollup(*hierarchy)
-        .agg(
+    sizes = pin(
+        df.rollup(*hierarchy).agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct(sensitive_col).alias("ld"),
             F.grouping_id().alias("gid"),
         )
-        .localCheckpoint(eager=False)
     )
     out = df
     for lvl in range(depth + 1):

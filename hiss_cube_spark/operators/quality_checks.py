@@ -18,6 +18,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hiss_cube_spark.pins import pin
+
 __all__ = [
     "numeric_histogram",
     "logbucket_sketch",
@@ -416,14 +418,12 @@ def logbucket_quantile_report(
     the cell table globally — bounded by the domain; at 100 TB you keep
     only the sketch leg (drop the companion) and nothing global remains.
     """
-    cells = (
+    # bounded by the value domain
+    cells = pin(
         df.select(F.col(col).alias("c"))
         .where(F.col("c") > 0)
         .groupBy("c")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # bounded by the value domain; LAZY (r13): the sketch and exact
-        # legs share the groupBy exchange below the pin
-        .localCheckpoint(eager=False)
     )
     from pyspark.sql import Window
 
@@ -574,11 +574,8 @@ def cm_heavy_hitters_report(
     # materialized by that action regardless of the limit. A refactor
     # that drops the full-scan siblings (or splits the action) must
     # flip this pin back to eager=True per the documented lazy-pin rule.
-    cells = (
-        df.select(F.col(col).alias("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)  # bounded by the key domain
+    cells = pin(  # bounded by the key domain
+        df.select(F.col(col).alias("k")).groupBy("k").agg(F.count(F.lit(1)).alias("cnt"))
     )
 
     def _legs(src: DataFrame, *extra: str) -> DataFrame:
@@ -698,13 +695,10 @@ def kmv_samples(
     # pin the bounded sample table (≤ k rows per group) — it feeds both
     # the threshold aggregate and every downstream sketch-algebra join;
     # without the pin each consumer re-runs the distinct+window scan.
-    # LAZY (r13): the window's rank-limit pushdown bounds the exchange
-    # at ≤ k rows per group per map partition, so the post-shuffle tail
-    # the two consumers each evaluate is trivial — the shuffle itself is
-    # shared — and the eager variant's extra driver action goes away
-    sample = ranked.where(F.col("rn") <= int(k)).localCheckpoint(
-        eager=False
-    )
+    # The window's rank-limit pushdown bounds the exchange at ≤ k rows
+    # per group per map partition, so the post-shuffle tail the two
+    # consumers each evaluate is trivial.
+    sample = pin(ranked.where(F.col("rn") <= int(k)))
     stats = sample.groupBy("g").agg(
         F.max("h").alias("_kth"), F.count(F.lit(1)).alias("_cnt")
     )
@@ -948,11 +942,8 @@ def spacesaving_report(
     companion; at scale you would not run it — the booleans are the
     contract it certifies).
     """
-    # ≤ 2k rows; LAZY — cand has exactly one consumer (the left join),
-    # so an eager checkpoint bought nothing but its own driver action
-    cand = spacesaving_merge(
-        spacesaving_summaries(df, col, k), k
-    ).localCheckpoint(eager=False)
+    # ≤ 2k rows; one consumer (the left join)
+    cand = pin(spacesaving_merge(spacesaving_summaries(df, col, k), k))
     # same null exclusion as the sketch pass — see spacesaving_summaries
     exact = (
         df.select(F.col(col).cast("string").alias("k"))
@@ -1229,25 +1220,23 @@ def ks_drift_grouped(
     group list; cumulative windows run per group over value-domain-bounded
     merged point sets. Raw rows never shuffle more than once, and the
     fact table is scanned ONCE: the per-(group, value) cell table is
-    checkpointed (it is bounded by |groups| x |distinct values|), the
+    pinned (it is bounded by |groups| x |distinct values|), the
     group list and — when ``reference is df``, the common self-drift
     monitor — the reference histogram and its total all derive from the
     cells instead of lazily re-deriving the scan.
     """
     from pyspark.sql.window import Window
 
-    curd = (
-        df.groupBy(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-        .agg(F.count(F.lit(1)).alias("c_g"))
-        .localCheckpoint(eager=False)  # LAZY r13: shared exchange below
+    curd = pin(
+        df.groupBy(F.col(group_col).alias("g"), F.col(value_col).alias("v")).agg(
+            F.count(F.lit(1)).alias("c_g")
+        )
     )
     if reference is df:
         refd = curd.groupBy("v").agg(F.sum("c_g").alias("c_r"))
     else:
-        refd = (
-            reference.groupBy(F.col(value_col).alias("v"))
-            .agg(F.count(F.lit(1)).alias("c_r"))
-            .localCheckpoint(eager=False)  # LAZY r13: same trade
+        refd = pin(
+            reference.groupBy(F.col(value_col).alias("v")).agg(F.count(F.lit(1)).alias("c_r"))
         )
     n_ref = refd.agg(F.sum("c_r").alias("n_ref"))
     groups = curd.select("g").distinct()

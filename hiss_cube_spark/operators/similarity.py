@@ -28,6 +28,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from hiss_cube_spark.functions.arrays import array_dot, array_l2_norm
+from hiss_cube_spark.pins import pin, pin_narrow
 
 __all__ = [
     "hard_negatives",
@@ -860,17 +861,14 @@ def semantic_dedup(
     # model.transform assigns cells JVM-side; at √n cells a literal
     # distance expression would carry n_cells × dim literals through
     # codegen (plan bloat), so unlike ivf_topk we keep the model in play
-    assigned = (
+    # both sides of the within-cell self-join read this — pin it so the
+    # KMeans assignment pass runs once, not once per side
+    assigned = pin(
         model.transform(feats)
         .withColumnRenamed("prediction", "cell")
         .withColumn("nrm", array_l2_norm(F.col("v")))
-        .select("id", "v", "cell", "nrm")
-        # both sides of the within-cell self-join read this —
-        # materialize so the KMeans assignment pass runs once, not once
-        # per side. localCheckpoint (like the sibling operators) rather
-        # than persist: the blocks are reclaimed when the plan is GC'd,
-        # so repeated calls in one session don't accumulate pinned cache
-        .localCheckpoint(eager=True)
+        .select("id", "v", "cell", "nrm"),
+        eager=True,
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     pairs = (
@@ -1062,17 +1060,11 @@ def dbscan_embeddings(
         pairs = cosine_pairs(
             corpus, threshold, id_col=id_col, vec_col=vec_col, exact=True
         ).select("id_a", "id_b")
-    # materialize the ONE-DIRECTIONAL pair list, not the mirrored one:
-    # the all-pairs kernel runs exactly once (the former und checkpoint
-    # computed it twice through the union's two branches before blocks
-    # existed), the eps-graph's four subtrees (degrees, core-core edges,
-    # border assignment, CC) re-read the half-size blocks through the
-    # trivial union, and checkpoint storage halves. Right-size the
-    # materialized blocks before the CC rounds re-scan them (narrow
-    # coalesce over measured bytes — clusters.py rationale).
-    from .clusters import _coalesce_checkpointed
-
-    pairs = _coalesce_checkpointed(pairs.localCheckpoint(eager=True))
+    # pin the ONE-DIRECTIONAL pair list, not the mirrored one: the
+    # all-pairs kernel runs exactly once, the eps-graph's four subtrees
+    # (degrees, core-core edges, border assignment, CC) re-read the
+    # half-size blocks through the trivial union, and pin storage halves
+    pairs = pin_narrow(pairs)
     und = pairs.union(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     )
@@ -1128,8 +1120,8 @@ def dbscan_embeddings(
 def _quantized_pin(
     df: DataFrame, id_col: str, vec_col: str, quant: int
 ) -> DataFrame:
-    """Project ``(id, floor-quantized int64 vector)`` and localCheckpoint
-    it eagerly: ONE source scan feeds every k-means round, centroid-sum
+    """Project ``(id, floor-quantized int64 vector)`` and pin it
+    eagerly: ONE source scan feeds every k-means round, centroid-sum
     and scoring pass (the ts_theil_sen/cur_source_overlap pin precedent —
     lazy re-derivation would re-read parquet once per reference).
 
@@ -1153,9 +1145,7 @@ def _quantized_pin(
         f"exactness bound sqrt(2^53/dim) — normalize vectors or lower "
         f"quant') AS BIGINT), 0))"
     )
-    return df.select(
-        F.col(id_col).alias("_vid"), vq.alias("_vq")
-    ).localCheckpoint(eager=True)
+    return pin(df.select(F.col(id_col).alias("_vid"), vq.alias("_vq")), eager=True)
 
 
 def kmeans_cosine(
@@ -1192,12 +1182,12 @@ def kmeans_cosine(
       cluster id.
 
     Scale shape: the quantized ``(id, grid-vector)`` projection is
-    localCheckpointed ONCE (one source scan total — see
+    pinned ONCE (one source scan total — see
     :func:`_quantized_pin`); every round broadcasts the k×dim centroid
     table against the pin, computes k dots per row inside codegen
     (``zip_with``/``aggregate``), window-argmaxes per id, then runs a
     (k×dim)-key integer-sum shuffle for the update; centroids are
-    eagerly checkpointed each round so lineage stays flat. Member sums
+    pinned each round so lineage stays flat. Member sums
     bound at ~9.2e18/quant ≈ 9e12 members per cluster at quant=1e6.
 
     Quantized component magnitudes must satisfy
@@ -1254,14 +1244,10 @@ def kmeans_cosine(
                 .agg(F.sum("_v").alias("_s"), F.count(F.lit(1)).alias("_n"))
             )
             # floor-mean: (s - posmod(s, n)) is divisible by n, so DIV is
-            # exact and engine-agnostic even for negative sums. Lazy
-            # checkpoint: the next round's broadcast build is this table's
-            # only consumer and materializes it; lineage still truncates
-            # there, but the separate eager count round-trip per round is
-            # gone (the connected_components probe-fusion precedent).
-            cents = (
-                cells.groupBy("_cid")
-                .agg(
+            # exact and engine-agnostic even for negative sums. The pin
+            # keeps each round's lineage flat.
+            cents = pin(
+                cells.groupBy("_cid").agg(
                     F.expr(
                         "transform("
                         "array_sort(collect_list(struct(_pos, _s, _n))), "
@@ -1269,7 +1255,6 @@ def kmeans_cosine(
                         "DIV p._n)"
                     ).alias("_cq")
                 )
-                .localCheckpoint(eager=False)
             )
     return assign.select(
         F.col("_vid").alias(id_col), F.col("_cid").cast("long").alias("cluster")
@@ -1304,17 +1289,18 @@ def cluster_prototypes(
     projection pin (:func:`_quantized_pin`) is built here and passed
     into :func:`kmeans_cosine`, so every k-means round, the centroid-sum
     pass and the member-scoring pass all read the pin; the
-    (id, cluster) assignment is additionally checkpointed (16 bytes/row
+    (id, cluster) assignment is additionally pinned (16 bytes/row
     — negligible next to the vectors), centroids broadcast.
     """
     q = _quantized_pin(df, id_col, vec_col, quant)
-    # Lazy checkpoint: the two consumers (centroid-sum pass, scoring pass)
-    # run in SEPARATE actions — the first materializes the 16-byte rows,
-    # the second reads the cache; eager would only add a driver round-trip.
-    assign = kmeans_cosine(
-        df, k=k, dim=dim, rounds=rounds, id_col=id_col, vec_col=vec_col,
-        quant=quant, _pinned_q=q,
-    ).localCheckpoint(eager=False)
+    # the two consumers (centroid-sum pass, scoring pass) run in SEPARATE
+    # actions, so the first one's single read materializes the pin
+    assign = pin(
+        kmeans_cosine(
+            df, k=k, dim=dim, rounds=rounds, id_col=id_col, vec_col=vec_col,
+            quant=quant, _pinned_q=q,
+        )
+    )
     joined = q.join(
         assign.select(F.col(id_col).alias("_vid"), "cluster"), "_vid"
     )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hiss_cube_spark.operators.dedup import token_code
+from hiss_cube_spark.pins import pin
 
 __all__ = [
     "tokenize",
@@ -426,18 +427,18 @@ def pmi_bigrams(
     # and the grand totals derive from them (sum of counts == total
     # occurrences — identical values); the lazy formulation re-scanned
     # the corpus for each total and once per broadcast reference of uni
-    bi_all = (
+    bi_all = pin(
         df.select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("c_ab"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("c_ab")),
+        eager=True,
     )
     bi = bi_all.where(F.col("c_ab") >= min_count)
-    uni = (
+    uni = pin(
         df.select(F.explode(toks).alias("token"))
         .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("c")),
+        eager=True,
     )
     totals = uni.agg(F.sum("c").cast("long").alias("n_tok")).crossJoin(
         bi_all.agg(F.sum("c_ab").cast("long").alias("n_bi"))
@@ -579,18 +580,13 @@ def bigram_lm_score(
 
     b = bigrams(df, with_id=True)
     tb = bigrams(train_src, with_id=False)
-    # the LM tables: ONE training scan. c2 is materialized (bounded by
+    # the LM tables: ONE training scan. c2 is pinned (bounded by
     # |vocab|^2 bigram TYPES, not corpus size) and the unigram counts +
     # vocabulary size derive from it (sum over w2 / distinct w2 —
     # identical values); the lazy formulation re-scanned the training
     # corpus once per table because per-branch column pruning defeats
     # exchange reuse
-    c2 = (
-        tb.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n2"))
-        # LAZY (r13): same trade as c123 above
-        .localCheckpoint(eager=False)
-    )
+    c2 = pin(tb.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n2")))
     c1 = c2.groupBy("w1").agg(F.sum("n2").alias("n1"))
     vocab = c2.agg(F.countDistinct("w2").alias("vsz"))
     p = (
@@ -671,15 +667,9 @@ def trigram_lm_score(
         )
 
     train = df if train_pred is None else df.where(train_pred)
-    c123 = (
-        grams(train, with_id=False)
-        .groupBy("w1", "w2", "w3")
-        .agg(F.count(F.lit(1)).alias("n123"))
-        # bounded by trigram TYPES; LAZY (r13) — the three marginal
-        # consumers share the groupBy exchange below the pin and only
-        # re-read its type-bounded final-agg tail, so the eager
-        # variant's dedicated driver action is pure overhead
-        .localCheckpoint(eager=False)
+    # bounded by trigram TYPES
+    c123 = pin(
+        grams(train, with_id=False).groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("n123"))
     )
     from pyspark.sql import Window
 

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hiss_cube_spark.pins import pin
+
 __all__ = [
     "resample_locf",
     "ewma",
@@ -300,15 +302,13 @@ def theil_sen_trend(
     self-join output is linear in keys; both join legs hash-partition on
     the key and the two window passes reuse that partitioning. The
     bucketed table (keys × horizon rows — tiny next to raw events) is
-    eagerly checkpointed so the self-join's two legs read it instead of
+    pinned so the self-join's two legs read it instead of
     each re-scanning + re-reducing the raw event table (the round-5
     scan-audit pattern). No driver-side work, no data-sized collect.
     """
-    # LAZY pin (r13): the self-join legs share _bucketed_cents' key
-    # exchange; only the horizon-capped window tail re-evaluates per leg
-    b = _bucketed_cents(
-        df, key_col, ts_us_col, value_col, bucket_us, horizon
-    ).localCheckpoint(eager=False)
+    # the self-join legs share _bucketed_cents' key exchange; only the
+    # horizon-capped window tail re-evaluates per leg
+    b = pin(_bucketed_cents(df, key_col, ts_us_col, value_col, bucket_us, horizon))
     lhs = b.select(
         "key", F.col("t").alias("ti"), F.col("yq").alias("yi"),
         F.col("rn").alias("ri"),
@@ -430,17 +430,15 @@ def structure_function(
     integer arithmetic — bit-identical across engines.
 
     Scale shape: identical to ``theil_sen_trend`` — the pair blow-up is
-    C(horizon, 2) per key (a constant), the bucketed table is eagerly
-    checkpointed so the self-join's legs don't each re-reduce raw events,
+    C(horizon, 2) per key (a constant), the bucketed table is pinned so
+    the self-join's legs don't each re-reduce raw events,
     and everything partitions on the key.
 
     Output: (key, lag, n_pairs, sum_d2q) — sum_d2q in cents² so callers
     can aggregate further exactly; divide by n_pairs·10⁴ for units².
     """
-    # LAZY pin (r13): same trade as theil_sen_trend above
-    b = _bucketed_cents(
-        df, key_col, ts_us_col, value_col, bucket_us, horizon
-    ).localCheckpoint(eager=False)
+    # same trade as theil_sen_trend above
+    b = pin(_bucketed_cents(df, key_col, ts_us_col, value_col, bucket_us, horizon))
     lhs = b.select("key", F.col("t").alias("ti"), F.col("yq").alias("yi"),
                    F.col("rn").alias("ri"))
     rhs = b.select("key", F.col("t").alias("tj"), F.col("yq").alias("yj"),
@@ -772,19 +770,15 @@ def dtw_distance(
         df, key_col, ts_us_col, value_col, bucket_us, n
     )
     if pair_source is None:
-        series = (
-            series.orderBy("key")
-            .limit(max_keys)
-            # max_keys rows; both join legs reuse
-            .localCheckpoint(eager=True)
-        )
+        # max_keys rows; both join legs reuse
+        series = pin(series.orderBy("key").limit(max_keys), eager=True)
         a = series.select(F.col("key").alias("key_a"), F.col("v").alias("av"))
         bb = series.select(F.col("key").alias("key_b"), F.col("v").alias("bv"))
         pairs = a.join(bb, F.col("key_a") < F.col("key_b"))
     else:
         # bounded intermediate (one row per qualified key) pinned once:
         # the banding pass and both vector-attach legs reuse it
-        series = series.localCheckpoint(eager=True)
+        series = pin(series, eager=True)
         cand = pair_source(series.select("key", "v"))
         pairs = (
             cand.join(

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from hiss_cube_spark.pins import pin, release, scope
+
 __all__ = [
     "train_bpe",
     "bpe_token_counts",
@@ -150,7 +152,6 @@ def learn_bpe_merges(
     freq_col: str = "f",
     merge_batch: int = 1,
     max_rounds: int = 512,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """FULL-CORPUS distributed BPE merge learning: exact pair counts every
     round, no sampling — the scale-grade counterpart of the driver-side
@@ -168,7 +169,7 @@ def learn_bpe_merges(
     semantics of Sennrich et al.'s reference loop (pinned against
     `train_bpe`'s python loop in tests). The corpus is scanned ONCE
     (`word_frequency_table`); the rounds iterate over the vocab-bounded
-    word table, re-persisted per round.
+    word table, re-pinned per round.
 
     COST MODEL (the driver-loop bound): each round is ONE Spark job (the
     pair-count collect, which materializes the previous round's fold as a
@@ -193,21 +194,16 @@ def learn_bpe_merges(
       many-thousand-job driver loop (raise the cap explicitly, or raise
       ``merge_batch``, or train on a sample via `train_bpe`).
 
-    Every ``checkpoint_every`` rounds the working table is
-    ``localCheckpoint``-ed instead of persisted: the fold lineage (and
-    plan analysis cost) otherwise grows linearly with the round number,
-    and an evicted persisted partition would recompute through every
-    earlier fold back to the source scan. Tradeoff on a real cluster:
-    localCheckpoint blocks cannot be recomputed after executor loss
-    (persist-only lineage can) — for preemptible executors use a
-    reliable ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``
-    variant, or a cadence larger than the expected failure-free window.
-    A LIVE checkpointed generation is never unpersisted (its blocks ARE
-    the recovery data once lineage is truncated), but the moment a newer
-    checkpoint materializes the older one is superseded — nothing can
-    recompute through it — and is released immediately. Retention is
-    bounded at one live checkpoint + two persisted generations; only the
-    FINAL checkpoint is left to the ContextCleaner.
+    Every generation of the working table is a lazy pin
+    (`hiss_cube_spark.pins`), so the fold lineage and its plan-analysis
+    cost stay flat in the round number. A round's collect materializes
+    the current generation; from then on nothing reads the one before it,
+    which is released at once. Every generation still held is released
+    before the call returns, because the merge table is built on the
+    driver: at most two generations are live during a round and none
+    after the call. A pin keeps no lineage, so a generation block lost
+    with an executor is not recomputed — the round reading it fails and
+    the training has to be rerun (or run on a sample with `train_bpe`).
 
     Returns (round, left_sym, right_sym, pair_count) — ``n_merges`` rows
     (fewer ONLY when the vocabulary's pairs exhaust first; running out of
@@ -219,11 +215,6 @@ def learn_bpe_merges(
     """
     if merge_batch < 1:
         raise ValueError(f"merge_batch must be >= 1 (got {merge_batch})")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1 (got {checkpoint_every}); use a "
-            f"value > max_rounds to effectively disable checkpointing"
-        )
     rounds_needed = -(-n_merges // merge_batch)  # ceil
     if rounds_needed > max_rounds:
         raise ValueError(
@@ -249,44 +240,29 @@ def learn_bpe_merges(
         F.split(F.col(word_col), "").alias("toks"),
         F.col(freq_col).cast("long").alias("f"),
     )
-    aqe_sized = (
-        str(spark.conf.get("spark.sql.adaptive.enabled", "false")).lower()
-        == "true"
-        and str(
-            spark.conf.get(
-                "spark.sql.adaptive.coalescePartitions.enabled", "true"
-            )
-        ).lower()
-        == "true"
+    # no override default: an unset key reads Spark's built-in default
+    aqe_sized = all(
+        spark.conf.get(key).lower() == "true"
+        for key in (
+            "spark.sql.adaptive.enabled",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+        )
     )
     if not aqe_sized:
         base = base.repartition(spark.sparkContext.defaultParallelism)
-    # Generation 0 is a LAZY checkpoint, not a persist: a cached plan's
-    # output partitioning is pinned pre-AQE (Spark leaves
-    # canChangeCachedPlanOutputPartitioning off), so a persist here kept
-    # the word table at the groupBy's full shuffle width — measured 32
-    # near-empty partitions re-scanned by every round's job at sf0.1 —
-    # while the checkpoint materializes the AQE-coalesced final plan
-    # (1 data-proportional partition at sf0.1; a 100 TB vocabulary keeps
-    # its advisory-sized width) and every fold generation inherits that
-    # width. Lazy is safe: the pin sits directly above the round's
-    # pair-count groupBy, whose exchange scans every partition at the
-    # materializing collect (the r13 lazy-pin rule).
-    cur = base.localCheckpoint(eager=False)
-    cur_ckpt = True  # whether cur's generation is localCheckpoint-ed
-    prev = None
-    prev_ckpt = False
-    # `anchor` = the latest MATERIALIZED checkpointed generation. Its
-    # blocks are load-bearing (persist-only generations recompute through
-    # it), so it is never unpersisted while current — but the moment a
-    # NEWER checkpoint materializes, nothing can recompute through the
-    # old anchor, and it is released. Retention is thus bounded at one
-    # live checkpoint + two persisted generations, instead of one
-    # corpus-sized copy per checkpointed round left to driver GC.
-    anchor = None
     merges: list[tuple[int, str, str, int]] = []
     pairs_exhausted = False
-    try:
+    with scope():
+        # Generation 0 is a pin, not a persist: a cached plan's output
+        # partitioning is fixed pre-AQE (Spark leaves
+        # canChangeCachedPlanOutputPartitioning off), so a persist here
+        # kept the word table at the groupBy's full shuffle width —
+        # measured 32 near-empty partitions re-scanned by every round's
+        # job at sf0.1 — while the pin stores the AQE-coalesced final plan
+        # (1 data-proportional partition at sf0.1; a 100 TB vocabulary
+        # keeps its advisory-sized width) and every fold generation
+        # inherits that width.
+        prev, cur = None, pin(base)
         # max_rounds is the HARD bound on actual rounds: token-sharing
         # winners can under-fill a batch, pushing the remainder to later
         # rounds (rounds_needed is the optimistic lower bound the upfront
@@ -311,10 +287,9 @@ def learn_bpe_merges(
                 .agg(F.sum("f").alias("n"))
             )
             want = min(merge_batch, n_merges - len(merges))
-            # this collect is the round's ONLY action: it fills cur's cache
-            # (one fold applied to the previous round's cached table) as a
-            # side effect — no separate materialization job needed. The
-            # previous cache must stay alive until here, then releases.
+            # this collect is the round's ONLY action: it fills cur's pin
+            # (one fold applied to the previous generation) as a side
+            # effect — no separate materialization job needed.
             # Candidate over-fetch (4x) gives the greedy disjoint filter
             # room; still vocabulary-bounded driver state.
             top = (
@@ -322,26 +297,8 @@ def learn_bpe_merges(
                 .limit(want if want == 1 else 4 * want)
                 .collect()
             )
-            # the collect above materialized `cur`; if cur is a
-            # checkpoint generation its lineage is truncated NOW, so the
-            # previous anchor checkpoint can no longer be recomputed
-            # through — release it and promote cur (ADVICE r12: a LIVE
-            # checkpointed generation must never be unpersisted, because
-            # deleting its blocks strands every lineage rooted at it;
-            # a SUPERSEDED one is referenced by nothing)
-            if cur_ckpt and cur is not anchor:
-                if anchor is not None:
-                    anchor.unpersist()
-                anchor = cur
             if prev is not None:
-                # a checkpointed prev became `anchor` at ITS
-                # materializing collect (one round earlier); persist-only
-                # generations release as soon as their successor is
-                # materialized — recomputes walk lineage back to the
-                # anchor
-                if prev is not anchor:
-                    prev.unpersist()
-                prev = None
+                release(prev)
             # greedy token-disjoint batch selection in winner order; a
             # pair's LEFT symbol must also differ from every symbol another
             # batch member CREATES (a+b string collision would let a later
@@ -403,22 +360,7 @@ def learn_bpe_merges(
                 ).alias("toks"),
                 "f",
             )
-            nxt_ckpt = k % checkpoint_every == 0
-            if nxt_ckpt:
-                # lineage truncation: materializes lazily on the next
-                # round's collect, like the persist it replaces
-                nxt = nxt.localCheckpoint(eager=False)
-            else:
-                nxt = nxt.persist()
-            prev, cur = cur, nxt
-            prev_ckpt, cur_ckpt = cur_ckpt, nxt_ckpt
-    finally:
-        # the final anchor checkpoint stays live (its blocks may still
-        # back `cur`'s lineage mid-teardown); ContextCleaner reclaims it
-        # on GC — bounded at ONE generation, not one per checkpoint round
-        for df in (cur, prev):
-            if df is not None and df is not anchor:
-                df.unpersist()
+            prev, cur = cur, pin(nxt)
     if len(merges) < n_merges and not pairs_exhausted:
         # token-sharing winners under-filled the batches round after round;
         # a silently short merge table would train an undersized vocabulary

@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from hiss_cube_spark import pins
 from hiss_cube_spark.operators.link import build_cutout_refs
 from hiss_cube_spark.operators.ml_cube import assign_targets, build_ml_cube
 from hiss_cube_spark.operators.viz_cube import build_visualization_cube
@@ -246,22 +247,21 @@ class CubePipeline:
     def phase_ml_cube(self) -> None:
         """Gold: the Global DB query.
 
-        The cutout table is eagerly checkpointed (inside the bounded-batch
+        The cutout table is eagerly pinned (inside the bounded-batch
         context — that is when the frame scan actually runs): both gold
         writes AND the band-completeness set derive from it, so without
         the pin this phase re-scans the full-frame bronze table once per
         action (2-3× the dominant I/O; measured 68.6 s → one scan on the
-        full-scale galaxy corpus). The checkpointed table is cutouts, not
-        frames — cutout_size²-bounded per row, executor-local."""
+        full-scale galaxy corpus). The pinned table is cutouts, not
+        frames — cutout_size²-bounded per row, executor-local — and is
+        released once both gold writes are done."""
         spectra = assign_targets(self.read("spectra"))
         refs = self.read("cutout_refs")
         images = self.read("images")
         tiles = self.read("image_tiles") if self.tiled else None
-        with self._frame_bounded_batches():
+        with self._frame_bounded_batches(), pins.scope():
             spec_cube, img_cube = build_ml_cube(
-                spectra, refs, images,
-                materialize=lambda df: df.localCheckpoint(eager=True),
-                tiles=tiles, tile=self.tile,
+                spectra, refs, images, materialize=True, tiles=tiles, tile=self.tile
             )
             self._write_observed(spec_cube, "ml_cube_spectra", ["zoom"])
             self._write_observed(img_cube, "ml_cube_images", ["zoom"])

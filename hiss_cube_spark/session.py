@@ -55,28 +55,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def release_rdd_blocks(spark: SparkSession, blocking: bool = False) -> int:
-    """Unpersist every persisted RDD and nudge the JVM GC.
-
-    ``spark.catalog.clearCache()`` frees ``persist()``-ed *tables* but NOT
-    ``localCheckpoint`` blocks — those live in the context's persistentRdds
-    registry until the RDD is garbage-collected, so a long session (a full
-    test run, a multi-hour driver) accumulates block-manager memory and
-    scratch files. Call this at a point where no caller will reuse a
-    checkpointed DataFrame (its lineage is truncated — recompute after
-    release raises). Returns the number of RDDs released.
-    """
-    sc = spark.sparkContext
-    try:
-        jmap = sc._jsc.getPersistentRDDs()
-        n = int(jmap.size())
-        it = jmap.values().iterator()
-        while it.hasNext():
-            it.next().unpersist(blocking)
-        # ContextCleaner reaps block files when the JVM-side RDD objects go
-        # unreachable; give it a push so scratch shrinks promptly.
-        sc._jvm.System.gc()
-        return n
-    except Exception:
-        return 0

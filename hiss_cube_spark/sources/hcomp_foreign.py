@@ -90,11 +90,6 @@ def _log2n(nmax: int) -> int:
 # --------------------------------------------------------------------------
 
 
-def _shuffle(v: np.ndarray) -> np.ndarray:
-    """Group even-index elements in the first half, odd in the second."""
-    return np.concatenate([v[0::2], v[1::2]], axis=0)
-
-
 def _unshuffle(v: np.ndarray) -> np.ndarray:
     n = v.shape[0]
     ne = (n + 1) // 2

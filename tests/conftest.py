@@ -10,12 +10,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from hiss_cube_spark import get_spark  # noqa: E402
 
 
+def _driver_heap() -> str:
+    """24g, or half the host's RAM where that is less.
+
+    The full-scale galaxy_small e2e moves a ~6 GB image corpus through one
+    local JVM, and the heap is fixed by whichever session starts the JVM
+    first. A heap the host cannot back does not spill: the JVM grows past
+    physical memory and the kernel kills it mid-write (a 16 GB host lost
+    every galaxy test to a 24g heap; with 8g and one task per core the
+    module passes with ~4 GB to spare)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(24 << 10, ram_mb // 2)}m"
+
+
+# set at import, before any session exists: modules that build their own
+# session (the galaxy e2e) inherit the same heap
+os.environ.setdefault("SPARK_DRIVER_MEM", _driver_heap())
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # the full-scale galaxy_small e2e moves a ~6 GB image corpus through
-    # one local JVM; 8g leaves the parquet writers short
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
     s = get_spark("hiss-cube-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
@@ -43,7 +58,7 @@ def _release_blocks_between_modules():
     s = SparkSession.getActiveSession()
     if s is not None:
         try:
-            from hiss_cube_spark.session import release_rdd_blocks
+            from hiss_cube_spark.pins import release_rdd_blocks
 
             s.catalog.clearCache()
             release_rdd_blocks(s)

@@ -135,17 +135,15 @@ def test_bucketed_layout_dir_scoped_per_user_and_corpus(tmp_path):
 
 
 def test_bpe_review_pins(spark):
-    """r12 self-review fixes: checkpoint_every validation upfront; a run
-    that exhausts max_rounds with merges still owed raises LOUDLY instead
-    of returning a silently short merge table (token-sharing winners
-    under-fill batches); natural pair exhaustion still returns short."""
+    """r12 self-review fixes: a run that exhausts max_rounds with merges
+    still owed raises LOUDLY instead of returning a silently short merge
+    table (token-sharing winners under-fill batches); natural pair
+    exhaustion still returns short."""
     from hiss_cube_spark.operators.tokenizer import learn_bpe_merges
 
     words = spark.createDataFrame(
         [("ab", 12), ("bc", 11)], "word string, f long"
     )
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        learn_bpe_merges(words, n_merges=2, checkpoint_every=0)
     # (a,b) wins round 1; (b,c) shares 'b' so the batch under-fills, and
     # max_rounds=1 leaves a merge owed -> loud error
     with pytest.raises(ValueError, match="under-fill"):
@@ -246,8 +244,8 @@ def test_embedding_decontaminate_modes(spark):
 
 
 def test_bpe_checkpoint_cadence_preserves_sequence(spark):
-    """Merges crossing several checkpoint boundaries (cadence=2) must be
-    bit-identical to the persist-only path and to the python loop."""
+    """Seven merges over pinned generations (each superseded one released
+    mid-training) must be bit-identical to the python loop."""
     import random
 
     from hiss_cube_spark.operators.tokenizer import learn_bpe_merges
@@ -262,7 +260,7 @@ def test_bpe_checkpoint_cadence_preserves_sequence(spark):
     want = _seq_reference(freqs, 7)
     got = [
         (r["round"], r.left_sym, r.right_sym, r.pair_count)
-        for r in learn_bpe_merges(words, n_merges=7, checkpoint_every=2)
+        for r in learn_bpe_merges(words, n_merges=7)
         .orderBy("round")
         .collect()
     ]

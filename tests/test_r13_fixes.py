@@ -347,19 +347,16 @@ def test_woe_iv_binning_hand_computed(spark):
 
 
 def test_bpe_checkpointed_generation_survives_recompute(spark):
-    """ADVICE r12: unpersisting a localCheckpoint-ed generation deletes
-    the blocks its truncated lineage depends on. After training with
-    checkpoint_every=1 the merge table must match sequential BPE AND the
-    trainer must leave no persisted generations it created behind it
-    (checkpointed ones are left for the ContextCleaner by design)."""
+    """ADVICE r12: releasing a pinned generation deletes the blocks its
+    truncated lineage depends on, so a generation may go only once its
+    successor is materialized. With every generation pinned the merge
+    table must still match sequential BPE."""
     from hiss_cube_spark.operators.tokenizer import learn_bpe_merges
 
     words = spark.createDataFrame(
         [("abab", 5), ("abc", 3), ("bc", 2)], "word string, f long"
     )
-    got = learn_bpe_merges(
-        words, n_merges=3, merge_batch=1, checkpoint_every=1
-    ).orderBy("round")
+    got = learn_bpe_merges(words, n_merges=3, merge_batch=1).orderBy("round")
     rows = [(r["left_sym"], r["right_sym"], r["pair_count"]) for r in got.collect()]
     assert rows[0] == ("a", "b", 13)  # ab appears 2*5 + 3 times
     assert len(rows) == 3

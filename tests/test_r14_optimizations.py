@@ -1,66 +1,8 @@
 """Round-14 optimization pins: every rewrite must be result-identical to
-the formulation it replaced.
-
-1. `_coalesce_checkpointed`: narrow-coalesces a materialized checkpoint to
-   a data-proportional partition count WITHOUT changing rows, and is a
-   safe no-op on plans whose size it cannot read.
-2. `connected_components` over a coalesced edge checkpoint ≡ the
-   un-coalesced result (the r14 right-sizing cannot change clusters).
+the formulation it replaced. (The narrow-pin tests live in test_pins.py.)
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from hiss_cube_spark.operators.clusters import (
-    _coalesce_checkpointed,
-    connected_components,
-)
-
-
-def test_coalesce_checkpointed_shrinks_and_preserves_rows(spark):
-    df = (
-        spark.range(2000)
-        .select(F.col("id").alias("a"), (F.col("id") * 2).alias("b"))
-        .repartition(32)
-        .localCheckpoint(eager=True)
-    )
-    assert df.rdd.getNumPartitions() == 32
-    out = _coalesce_checkpointed(df)
-    # 2000 tiny rows are far below one 32 MB target partition
-    assert out.rdd.getNumPartitions() == 1
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, df.collect())
-    )
-
-
-def test_coalesce_checkpointed_noop_on_non_checkpoint_plans(spark):
-    plain = spark.range(100).repartition(8)
-    assert _coalesce_checkpointed(plain) is plain
-    # a projection over a checkpoint is not a bare LogicalRDD either
-    proj = spark.range(100).localCheckpoint(eager=True).select(
-        (F.col("id") + 1).alias("x")
-    )
-    assert _coalesce_checkpointed(proj) is proj
-
-
-def test_connected_components_identical_after_coalesce(spark):
-    # two chains + a singleton pair, emitted wide so the checkpoint has
-    # many near-empty partitions before the helper fires inside CC
-    rows = [(1, 2), (2, 3), (10, 11), (11, 12), (20, 21)]
-    pairs = spark.createDataFrame(rows, "doc_a long, doc_b long").repartition(
-        32
-    )
-    got = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components(pairs).collect()
-    }
-    want = {
-        (1, 1), (2, 1), (3, 1),
-        (10, 10), (11, 10), (12, 10),
-        (20, 20), (21, 20),
-    }
-    assert got == want
 
 
 def test_logbucket_quantile_report_broadcast_total_pins(spark):

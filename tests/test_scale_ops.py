@@ -432,8 +432,8 @@ def test_plan_shapes_hold(spark, sf_dir):
     assert "CartesianProduct" not in plan("ann_sq_topk")
     # the composed 6-stage curation funnel: no cartesian anywhere, the
     # pinned survivor-id stages ARE reused — as checkpoint RDD scans
-    # since r14 (`_swap_persist(..., ckpt=True)`; InMemoryTableScan
-    # accepted for a persist-pinned variant) — and the exchange count
+    # since r14 (tagged `pins.pin`; InMemoryTableScan accepted for a
+    # persist-pinned variant) — and the exchange count
     # stays bounded (47 at the r12 audit, 14 behind the r14 checkpoint
     # pins — a de-optimization that re-materializes stages from source
     # would blow well past this)

@@ -54,9 +54,11 @@ def spark():
     isolation. Restarting the context here gives this module a clean block
     manager and scratch dirs; the module is named to SORT LAST (zz_) so no
     later test needs the session it stops. Driver-heap note: in local mode
-    the JVM persists across context restarts, so the 24g heap is whatever
-    the FIRST session set — the setdefault below covers the
-    run-this-module-alone case."""
+    the JVM persists across context restarts, so the heap is whatever the
+    FIRST session set — conftest sizes it to the host. Tasks run one per
+    core, at most 8: every concurrent frame writer holds its own parquet
+    buffers outside Spark's memory accounting, so extra threads on a small
+    host add heap pressure and no speed."""
     import shutil as _sh
     import tempfile as _tf
 
@@ -70,12 +72,13 @@ def spark():
             f"galaxy_small e2e needs >=10 GB free scratch disk for the 6 GB "
             f"corpus + shuffle spill; only {free_gb:.1f} GB free"
         )
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+    cores = min(8, os.cpu_count() or 8)
     old = SparkSession.getActiveSession()
     if old is not None:
         old.stop()
-    s = get_spark("hiss-cube-galaxy-e2e", shuffle_partitions=8)
+    s = get_spark(
+        "hiss-cube-galaxy-e2e", master=f"local[{cores}]", shuffle_partitions=8
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

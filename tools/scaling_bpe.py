@@ -1,7 +1,7 @@
 """BPE-trainer round-cost scaling (VERDICT r11 #6): at 1000x rows, show
 (a) the one-time corpus-scan leg vs the vocab-flat rounds decomposition,
-(b) per-merge marginal cost FLAT in the round number (the localCheckpoint
-cadence keeps lineage from growing), and (c) the merge_batch lever cutting
+(b) per-merge marginal cost FLAT in the round number (the per-round pin
+keeps lineage from growing), and (c) the merge_batch lever cutting
 sequential rounds ~merge_batch-fold for a 64-merge vocabulary.
 
 The word table is materialized once to parquet so the round timings are
