@@ -9,25 +9,36 @@ reference's analog is the target self-grouping that collapses co-located
 spectra into one object (metadata_strategy_cube_ml.py:598-602), applied to
 the similarity graph instead of the sky.
 
-Distributed algorithm: iterative min-label propagation. Each node starts
-labelled with its own id; every iteration each node takes the min of its
-label and its neighbors' labels; at fixpoint every node in a component
-carries the component's min id. Per iteration this is one shuffle join
-(edges ⋈ labels on the neighbor key) plus one map-side-combining groupBy —
-no driver-side graph state, so it scales to edge lists that don't fit on
-one machine. Iteration count is the graph diameter; near-dup graphs are
-overwhelmingly tiny cliques and short chains (diameter ≤ 3), so 2-4 rounds
-converge. Lineage is cut with a pin every round — without it the plan
-doubles per iteration and py4j plan-build time blows up long before the
-data does.
+Algorithm: iterative min-label propagation. Each node starts labelled
+with its own id; every iteration each node takes the min of its label and
+its neighbors' labels; at fixpoint every node in a component carries the
+component's min id. Which regime runs it follows the measured size of the
+pinned edge list (`pins.collect_if_narrow`):
+
+* driver — an edge list that stores at most one narrow partition (32 MB;
+  a near-dup pair list is usually a few hundred rows) is collected once
+  through Arrow and labelled in-process with vectorized numpy rounds, so
+  the whole operator costs one Spark job instead of one per round;
+* distributed — above that, per iteration one shuffle join (edges ⋈ labels
+  on the neighbor key) plus one map-side-combining groupBy, with no
+  driver-side graph state, so it scales to edge lists that don't fit on
+  one machine. Lineage is cut with a pin every round — without it the
+  plan doubles per iteration and py4j plan-build time blows up long
+  before the data does.
+
+Iteration count is the graph diameter; near-dup graphs are overwhelmingly
+tiny cliques and short chains (diameter ≤ 3), so 2-4 rounds converge.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from hiss_cube_spark.pins import pin, pin_narrow, release
+from hiss_cube_spark.pins import collect_if_narrow, pin, pin_narrow, release
 
 __all__ = [
     "connected_components",
@@ -35,6 +46,30 @@ __all__ = [
     "resolve_duplicates_best",
     "golden_records",
 ]
+
+
+def _min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, component min node) of the undirected edges ``a[i]–b[i]``.
+
+    Nodes become their sorted rank, so the min rank is the min id. Each
+    round is vectorized: every edge pulls both ends to the smaller label,
+    then pointer jumping (``label[label]``) skips along chains. A label
+    is always a node of the same component and never above the node's
+    own rank, so the fixpoint, where no edge joins two labels, is the
+    component's min."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    label = np.arange(len(nodes))
+    while True:
+        m = np.minimum(label[u], label[v])
+        new = label.copy()
+        np.minimum.at(new, u, m)
+        np.minimum.at(new, v, m)
+        new = new[new]
+        if np.array_equal(new, label):
+            return nodes, nodes[label]
+        label = new
+
 
 def connected_components(
     pairs: DataFrame,
@@ -48,15 +83,25 @@ def connected_components(
     is the minimum node id of the connected component.
 
     Converges in diameter-many rounds and stops early as soon as a round
-    changes nothing. Raises if ``max_iter`` rounds don't reach the fixpoint
-    (a diameter that large means the input is not a near-dup pair list).
-    ``symmetric=True`` declares that ``pairs`` already carries BOTH
-    directions of every edge (e.g. DBSCAN's eps-graph), skipping the
-    symmetrizing union.
+    changes nothing. ``symmetric=True`` declares that ``pairs`` already
+    carries BOTH directions of every edge (e.g. DBSCAN's eps-graph),
+    skipping the symmetrizing union. Edges with a null end are dropped: a
+    null is not a node.
 
-    Per-round driver latency is ONE action: the round's label table is a
-    lazy pin and the convergence probe is a full (non-limited) filtered
-    ``count()`` over it — the count's scan is what materializes every
+    Driver regime: when the pinned directed edge list stores at most one
+    narrow partition (`pins.collect_if_narrow`), it is collected once
+    through Arrow, labelled in-process (`_min_labels`), released, and the
+    result is a local relation with the distributed path's schema; the
+    rounds run no Spark job and ``max_iter`` does not apply (the
+    in-process loop always reaches the fixpoint). ``symmetric=True`` and
+    ``edges_materialized=True`` inputs are not pinned here, so nothing is
+    measured and they always take the distributed loop.
+
+    Distributed regime: raises if ``max_iter`` rounds don't reach the
+    fixpoint (a diameter that large means the input is not a near-dup
+    pair list). Per-round driver latency is ONE action: the round's label
+    table is a lazy pin and the convergence probe is a full (non-limited)
+    filtered ``count()`` over it — the count's scan is what materializes every
     pinned partition (a ``limit(1)`` probe would short-circuit and leave
     partitions uncomputed behind a truncated lineage). Once the count has
     run, the previous round's label pin is superseded and released; the
@@ -82,14 +127,25 @@ def connected_components(
     dedup_clusters — one extra driver action buys half the pair
     compute).
     """
-    edges = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    edges = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
     made = []
     if not symmetric:
         if not edges_materialized:
             edges = pin_narrow(edges)
             made.append(edges)
         # Undirected: propagate along both directions of every edge.
-        edges = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        und = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        local = None if edges_materialized else collect_if_narrow(edges)
+        if local is not None:
+            nodes, cluster = _min_labels(
+                local.column("a").to_numpy(), local.column("b").to_numpy()
+            )
+            t = und.schema["a"].dataType
+            return und.sparkSession.createDataFrame(
+                pa.table({"node": nodes, "cluster_id": cluster}),
+                StructType([StructField("node", t), StructField("cluster_id", t)]),
+            )
+        edges = und
     edges = pin(edges)
     made.append(edges)
 

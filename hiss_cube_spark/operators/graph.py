@@ -23,10 +23,13 @@ linearly in ``iterations``; for long chains, checkpoint every ~10 rounds
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from hiss_cube_spark.pins import pin, pin_narrow
+from hiss_cube_spark.pins import collect_if_narrow, pin, pin_narrow
 
 __all__ = ["pagerank", "triangle_count", "bfs_hops", "label_propagation"]
 
@@ -207,6 +210,35 @@ def bfs_hops(
     return dist
 
 
+def _mode_labels(
+    a: np.ndarray, b: np.ndarray, iterations: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(node, label) after ``iterations`` synchronous rounds over the
+    distinct undirected non-self-loop edges ``a[i]–b[i]``: each node takes
+    the most frequent label among its neighbours, ties to the smallest.
+
+    Nodes become their sorted rank, so comparing ranks compares ids, and a
+    (node, label) pair packs into one int64 key: a round is one
+    ``np.unique`` count of the keys and one ``lexsort`` that puts each
+    node's winning label first."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    n = len(nodes)
+    u, v = inv[: len(a)], inv[len(a):]
+    keep = u != v
+    e = np.unique(np.concatenate([u[keep] * n + v[keep], v[keep] * n + u[keep]]))
+    src, dst = e // n, e % n
+    label = np.arange(n)
+    for _ in range(iterations):
+        key, cnt = np.unique(src * n + label[dst], return_counts=True)
+        node, lab = key // n, key % n
+        order = np.lexsort((lab, -cnt, node))
+        node, lab = node[order], lab[order]
+        first = np.diff(node, prepend=-1) != 0
+        label[node[first]] = lab[first]
+    present = np.unique(src)
+    return nodes[present], nodes[label[present]]
+
+
 def label_propagation(
     edges: DataFrame,
     src_col: str = "src",
@@ -221,11 +253,20 @@ def label_propagation(
     asynchronous sweep) keeps the result engine-independent — the oracle
     unrolls the same rounds as CTEs, the `pagerank` precedent.
 
-    Scale shape per round: one shuffle join (edges ⋈ labels on the
-    neighbor key), one map-side-combining (node, label) count, one
-    per-node argmax window over that bounded count table — the same
-    per-round cost envelope as `connected_components`, with the same
-    pinned lineage cut per round.
+    Two regimes, chosen like `connected_components`' by the measured size
+    of the pinned directed edge list (`pins.collect_if_narrow`):
+
+    * driver — at most one narrow partition (32 MB): the list is collected
+      once through Arrow and every round runs in-process as vectorized
+      numpy (`_mode_labels`); the result is a local relation, and the
+      rounds fire no Spark job;
+    * distributed — above that, per round one shuffle join (edges ⋈
+      labels on the neighbor key), one map-side-combining (node, label)
+      count, one per-node argmax window over that bounded count table —
+      the same per-round cost envelope as `connected_components`, with the
+      same pinned lineage cut per round.
+
+    Edges with a null end or equal ends are dropped in both.
 
     Returns ``(node, community)``.
     """
@@ -234,12 +275,23 @@ def label_propagation(
     # Pin the directed list once before symmetrizing: the union reads
     # its input through two branches of one action, which would compute
     # the caller's edge plan twice.
-    de = pin_narrow(edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")))
-    und = pin(
-        de.union(de.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
+    de = pin_narrow(
+        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).dropna()
     )
+    und = de.union(de.select(F.col("b").alias("a"), F.col("a").alias("b"))).where(
+        F.col("a") != F.col("b")
+    )
+    local = collect_if_narrow(de)
+    if local is not None:
+        nodes, community = _mode_labels(
+            local.column("a").to_numpy(), local.column("b").to_numpy(), iterations
+        )
+        t = und.schema["a"].dataType
+        return und.sparkSession.createDataFrame(
+            pa.table({"node": nodes, "community": community}),
+            StructType([StructField("node", t), StructField("community", t)]),
+        )
+    und = pin(und.distinct())
     labels = und.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )

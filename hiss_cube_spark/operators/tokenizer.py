@@ -20,14 +20,16 @@ counts, the property data splits and dedup fingerprints rely on.
 
 from __future__ import annotations
 
-from collections import Counter
+import heapq
+from collections import Counter, defaultdict
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from hiss_cube_spark.pins import pin, release, scope
+from hiss_cube_spark.pins import collect_if_narrow, pin, pin_narrow, release, scope
 
 __all__ = [
     "train_bpe",
@@ -145,6 +147,134 @@ def word_frequency_table(
     return w
 
 
+class _SparkPairs:
+    """Distributed BPE rounds: pair counts and folds as Spark jobs over the
+    pinned word table, one job per round.
+
+    Every fold generation is a lazy pin (`hiss_cube_spark.pins`), so the
+    fold lineage and its plan-analysis cost stay flat in the round
+    number. A round's collect materializes the current generation; from
+    then on nothing reads the one before it, which is released at once,
+    so at most two generations are live during a round."""
+
+    def __init__(self, table: DataFrame):
+        self.cur, self.prev = table, None
+
+    def top(self, limit: int) -> list[tuple[str, str, int]]:
+        pairs = (
+            self.cur.select(
+                F.explode(
+                    # greatest(…, 0): a size-0 token array (empty-string
+                    # word from a permissive caller pattern) must yield
+                    # zero pairs, not a negative-length slice error
+                    F.expr(
+                        "zip_with("
+                        "slice(toks, 1, greatest(size(toks) - 1, 0)), "
+                        "slice(toks, 2, greatest(size(toks) - 1, 0)), "
+                        "(x, y) -> named_struct('a', x, 'b', y))"
+                    )
+                ).alias("p"),
+                "f",
+            )
+            .groupBy("p.a", "p.b")
+            .agg(F.sum("f").alias("n"))
+        )
+        # this collect is the round's ONLY action: from round 2 on it also
+        # fills cur's lazy pin (one fold over the previous generation)
+        rows = pairs.orderBy(F.desc("n"), "a", "b").limit(limit).collect()
+        if self.prev is not None:
+            release(self.prev)
+        return [(r["a"], r["b"], int(r["n"])) for r in rows]
+
+    def fold(self, merge: dict[tuple[str, str], str]) -> None:
+        # the winning symbols bind as literal Columns (never interpolated
+        # into SQL text — a quote/backslash in the alphabet cannot break
+        # the expression)
+        def _fold(acc, s):
+            out = None
+            for (a_sym, b_sym), ab in merge.items():
+                hit = (
+                    (F.size(acc) > 0)
+                    & (F.element_at(acc, -1) == F.lit(a_sym))
+                    & (s == F.lit(b_sym))
+                )
+                merged = F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(ab)))
+                out = F.when(hit, merged) if out is None else out.when(hit, merged)
+            return out.otherwise(F.concat(acc, F.array(s)))
+
+        nxt = self.cur.select(
+            F.aggregate("toks", F.expr("cast(array() as array<string>)"), _fold).alias("toks"),
+            "f",
+        )
+        self.prev, self.cur = self.cur, pin(nxt)
+
+
+def _fold_symbols(toks: list[str], merge: dict[tuple[str, str], str]) -> list[str]:
+    """`_SparkPairs.fold`'s left-to-right fold of one word, in Python."""
+    out: list[str] = []
+    for s in toks:
+        ab = merge.get((out[-1], s)) if out else None
+        if ab is None:
+            out.append(s)
+        else:
+            out[-1] = ab
+    return out
+
+
+class _DriverPairs:
+    """Driver BPE rounds over the collected word table.
+
+    Pair counts are kept incrementally: an index maps each pair to the
+    words that contain it, a fold re-counts only the words holding a
+    winner, and a lazily pruned heap (entries whose count went stale are
+    dropped when popped) yields the ordered candidates, so a round costs
+    what its merges touch, not the vocabulary."""
+
+    def __init__(self, table: pa.Table):
+        self.words = [t or [] for t in table.column("toks").to_pylist()]
+        self.freq = [f or 0 for f in table.column("f").to_pylist()]
+        self.counts: Counter = Counter()
+        self.where: dict[tuple[str, str], set[int]] = defaultdict(set)
+        for i in range(len(self.words)):
+            self._count(i, 1)
+        self.heap = [(-n, a, b) for (a, b), n in self.counts.items()]
+        heapq.heapify(self.heap)
+
+    def _count(self, i: int, sign: int) -> set[tuple[str, str]]:
+        """Add (``sign`` 1) or remove (-1) word ``i``'s pairs; returns them."""
+        w = self.words[i]
+        pairs = list(zip(w, w[1:]))
+        for p in pairs:
+            self.counts[p] += sign * self.freq[i]
+            if sign > 0:
+                self.where[p].add(i)
+        return set(pairs)
+
+    def top(self, limit: int) -> list[tuple[str, str, int]]:
+        out: list[tuple[str, str, int]] = []
+        while self.heap and len(out) < limit:
+            n, a, b = heapq.heappop(self.heap)
+            if -n == self.counts.get((a, b)) and (not out or out[-1][:2] != (a, b)):
+                out.append((a, b, -n))
+        for a, b, n in out:
+            heapq.heappush(self.heap, (-n, a, b))
+        return out
+
+    def fold(self, merge: dict[tuple[str, str], str]) -> None:
+        changed: set[tuple[str, str]] = set()
+        for i in set().union(*(self.where.pop(p, ()) for p in merge)):
+            w = _fold_symbols(self.words[i], merge)
+            if w != self.words[i]:
+                changed |= self._count(i, -1)
+                self.words[i] = w
+                changed |= self._count(i, 1)
+        for p in changed:
+            if self.counts[p] > 0:
+                heapq.heappush(self.heap, (-self.counts[p], *p))
+            else:
+                del self.counts[p]
+
+
 def learn_bpe_merges(
     words: DataFrame,
     n_merges: int = 4,
@@ -153,30 +283,40 @@ def learn_bpe_merges(
     merge_batch: int = 1,
     max_rounds: int = 512,
 ) -> DataFrame:
-    """FULL-CORPUS distributed BPE merge learning: exact pair counts every
-    round, no sampling — the scale-grade counterpart of the driver-side
-    `train_bpe` (which trains on a bounded sample because its loop is
-    local).
+    """FULL-CORPUS BPE merge learning: exact pair counts every round, no
+    sampling — the scale-grade counterpart of `train_bpe` (which trains on
+    a bounded document sample).
 
-    Per round, entirely on executors: adjacent symbol pairs of every word
-    (``zip_with`` over the symbol array — row-local, no explode of text),
-    weighted by word frequency, one map-side-combining groupBy bounded by
-    the PAIR vocabulary; the round's winner (max count, ties →
-    lexicographically smallest pair, the `train_bpe` law) is a bounded
-    collect — driver state is K rows total. The merge applies as a
-    row-local canonical left-to-right fold (``aggregate`` HOF): within a
-    run of overlapping matches every other one merges, the exact
-    semantics of Sennrich et al.'s reference loop (pinned against
-    `train_bpe`'s python loop in tests). The corpus is scanned ONCE
-    (`word_frequency_table`); the rounds iterate over the vocab-bounded
-    word table, re-pinned per round.
+    Each round counts the adjacent symbol pairs of every word, weighted by
+    word frequency; the round's winner (max count, ties →
+    lexicographically smallest pair, the `train_bpe` law) merges through a
+    canonical left-to-right fold: within a run of overlapping matches
+    every other one merges, the exact semantics of Sennrich et al.'s
+    reference loop (pinned against `train_bpe`'s python loop in tests).
+    The corpus is scanned ONCE (`word_frequency_table`); the rounds
+    iterate over the vocab-bounded word table, which is an eager narrow
+    pin (`pins.pin_narrow`), right-sized by its measured bytes.
 
-    COST MODEL (the driver-loop bound): each round is ONE Spark job (the
-    pair-count collect, which materializes the previous round's fold as a
-    side effect), so a vocabulary of K merges costs ``ceil(K /
-    merge_batch)`` sequential jobs over the vocab-sized table — inherent
-    to BPE's global argmax, never corpus-sized, but at thousands of
-    merges the job-submission floor dominates. Two levers, both guarded:
+    COST MODEL: the regime follows the pinned word table's measured size
+    (`pins.collect_if_narrow`).
+
+    * driver — a table that stores at most one narrow partition (32 MB)
+      is collected once through Arrow and released; every round runs
+      in-process (`_DriverPairs`), with pair counts updated only for the
+      words a merge touches. Training costs two Spark jobs (the pin and
+      the collect) whatever the merge count.
+    * distributed — above that, each round is ONE Spark job over the
+      pinned table (`_SparkPairs`: a ``zip_with`` pair explode, a
+      map-side-combining groupBy bounded by the pair vocabulary, and the
+      bounded top-candidates collect, which also materializes the
+      previous fold), so K merges cost ``ceil(K / merge_batch)``
+      sequential jobs — inherent to BPE's global argmax, never
+      corpus-sized, but at thousands of merges the job-submission floor
+      dominates. A pin keeps no lineage, so a generation block lost with
+      an executor is not recomputed — the round reading it fails and the
+      training has to be rerun (or run on a sample with `train_bpe`).
+
+    Both regimes share the round loop and its two guards:
 
     * ``merge_batch > 1`` applies up to that many TOKEN-DISJOINT top
       pairs per counting round (greedy in the (count desc, pair asc)
@@ -189,27 +329,18 @@ def learn_bpe_merges(
       merge LIST may diverge from ``merge_batch=1`` (exact when it
       doesn't, e.g. disjoint sub-alphabets; tests pin both). Batch=1 is
       bit-exact sequential BPE.
-    * ``max_rounds`` bounds the sequential-job count loudly: asking for
+    * ``max_rounds`` bounds the sequential round count loudly: asking for
       more rounds than the cap raises instead of silently launching a
       many-thousand-job driver loop (raise the cap explicitly, or raise
       ``merge_batch``, or train on a sample via `train_bpe`).
 
-    Every generation of the working table is a lazy pin
-    (`hiss_cube_spark.pins`), so the fold lineage and its plan-analysis
-    cost stay flat in the round number. A round's collect materializes
-    the current generation; from then on nothing reads the one before it,
-    which is released at once. Every generation still held is released
-    before the call returns, because the merge table is built on the
-    driver: at most two generations are live during a round and none
-    after the call. A pin keeps no lineage, so a generation block lost
-    with an executor is not recomputed — the round reading it fails and
-    the training has to be rerun (or run on a sample with `train_bpe`).
+    No pin outlives the call. Word frequencies are positive counts.
 
     Returns (round, left_sym, right_sym, pair_count) — ``n_merges`` rows
     (fewer ONLY when the vocabulary's pairs exhaust first; running out of
     ``max_rounds`` with merges still owed raises instead of silently
     returning a short merge table); ``round`` is the counting-round index
-    (rows within a batch share it).
+    (rows within a batch share it). The table is a local relation.
     Word-interior merges only (no ``</w>`` end marker): the variant with
     the marker changes symbols, not shapes.
     """
@@ -223,82 +354,25 @@ def learn_bpe_merges(
             f"{max_rounds}); raise merge_batch, raise max_rounds "
             f"explicitly, or train on a bounded sample with train_bpe"
         )
-    spark = words.sparkSession
-    # right-size the vocab table once: it is orders of magnitude smaller
-    # than the corpus, and every round's fold/pair job re-scans it. With
-    # AQE partition coalescing on (the session default) the word table's
-    # own groupBy exchange already lands data-proportionally sized
-    # partitions (measured at sf0.1: 31 rows -> 1 partition instead of a
-    # defaultParallelism fan-out re-scanned K rounds x stages; a 100 TB
-    # vocabulary keeps its width via the advisory size) — an explicit
-    # per-core repartition both added an exchange and pinned near-empty
-    # round tables at core-count width (r13 driver scaling 0.57: the
-    # query ran FASTER on 8 cores than 32). Without AQE coalescing, fall
-    # back to the old explicit right-sizing so the rounds never inherit
-    # a raw shuffle.partitions=200 fan-out.
     base = words.select(
         F.split(F.col(word_col), "").alias("toks"),
         F.col(freq_col).cast("long").alias("f"),
     )
-    # no override default: an unset key reads Spark's built-in default
-    aqe_sized = all(
-        spark.conf.get(key).lower() == "true"
-        for key in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.adaptive.coalescePartitions.enabled",
-        )
-    )
-    if not aqe_sized:
-        base = base.repartition(spark.sparkContext.defaultParallelism)
     merges: list[tuple[int, str, str, int]] = []
     pairs_exhausted = False
     with scope():
-        # Generation 0 is a pin, not a persist: a cached plan's output
-        # partitioning is fixed pre-AQE (Spark leaves
-        # canChangeCachedPlanOutputPartitioning off), so a persist here
-        # kept the word table at the groupBy's full shuffle width —
-        # measured 32 near-empty partitions re-scanned by every round's
-        # job at sf0.1 — while the pin stores the AQE-coalesced final plan
-        # (1 data-proportional partition at sf0.1; a 100 TB vocabulary
-        # keeps its advisory-sized width) and every fold generation
-        # inherits that width.
-        prev, cur = None, pin(base)
+        table = pin_narrow(base)
+        local = collect_if_narrow(table)
+        rounds = _SparkPairs(table) if local is None else _DriverPairs(local)
         # max_rounds is the HARD bound on actual rounds: token-sharing
         # winners can under-fill a batch, pushing the remainder to later
         # rounds (rounds_needed is the optimistic lower bound the upfront
         # guard checks)
         for k in range(1, max_rounds + 1):
-            pairs = (
-                cur.select(
-                    F.explode(
-                        # greatest(…, 0): a size-0 token array (empty-string
-                        # word from a permissive caller pattern) must yield
-                        # zero pairs, not a negative-length slice error
-                        F.expr(
-                            "zip_with("
-                            "slice(toks, 1, greatest(size(toks) - 1, 0)), "
-                            "slice(toks, 2, greatest(size(toks) - 1, 0)), "
-                            "(x, y) -> named_struct('a', x, 'b', y))"
-                        )
-                    ).alias("p"),
-                    "f",
-                )
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("f").alias("n"))
-            )
             want = min(merge_batch, n_merges - len(merges))
-            # this collect is the round's ONLY action: it fills cur's pin
-            # (one fold applied to the previous generation) as a side
-            # effect — no separate materialization job needed.
             # Candidate over-fetch (4x) gives the greedy disjoint filter
             # room; still vocabulary-bounded driver state.
-            top = (
-                pairs.orderBy(F.desc("n"), "a", "b")
-                .limit(want if want == 1 else 4 * want)
-                .collect()
-            )
-            if prev is not None:
-                release(prev)
+            top = rounds.top(want if want == 1 else 4 * want)
             # greedy token-disjoint batch selection in winner order; a
             # pair's LEFT symbol must also differ from every symbol another
             # batch member CREATES (a+b string collision would let a later
@@ -307,13 +381,12 @@ def learn_bpe_merges(
             batch: list[tuple[str, str, int]] = []
             used: set[str] = set()
             created: set[str] = set()
-            for r in top:
-                a, b = r["a"], r["b"]
+            for a, b, n in top:
                 if a in used or b in used or a in created:
                     continue
                 if any(m_a == a + b for m_a, _, _ in batch):
                     continue
-                batch.append((a, b, int(r["n"])))
+                batch.append((a, b, n))
                 used.update((a, b))
                 created.add(a + b)
                 if len(batch) >= want:
@@ -324,43 +397,10 @@ def learn_bpe_merges(
             merges.extend((k, a, b, n) for a, b, n in batch)
             if len(merges) >= n_merges:
                 break  # the last winners need no apply pass
-            # canonical left-to-right merge fold over the WHOLE batch; the
-            # winning symbols bind as literal Columns (never interpolated
-            # into SQL text — a quote/backslash in the alphabet cannot
-            # break the expression). Token-disjointness makes the per-pair
-            # hits mutually exclusive at any fold step, so one pass
-            # applies every pair with sequential-per-pair semantics.
-            def _make_fold(pairs_batch: list[tuple[str, str, int]]):
-                def _fold(acc, s):
-                    out = None
-                    for a_sym, b_sym, _ in pairs_batch:
-                        hit = (
-                            (F.size(acc) > 0)
-                            & (F.element_at(acc, -1) == F.lit(a_sym))
-                            & (s == F.lit(b_sym))
-                        )
-                        merged = F.concat(
-                            F.slice(acc, 1, F.size(acc) - 1),
-                            F.array(F.lit(a_sym + b_sym)),
-                        )
-                        out = (
-                            F.when(hit, merged)
-                            if out is None
-                            else out.when(hit, merged)
-                        )
-                    return out.otherwise(F.concat(acc, F.array(s)))
-
-                return _fold
-
-            nxt = cur.select(
-                F.aggregate(
-                    "toks",
-                    F.expr("cast(array() as array<string>)"),
-                    _make_fold(batch),
-                ).alias("toks"),
-                "f",
-            )
-            prev, cur = cur, pin(nxt)
+            # Token-disjointness makes the per-pair hits mutually
+            # exclusive at any fold step, so one pass applies every pair
+            # with sequential-per-pair semantics.
+            rounds.fold({(a, b): a + b for a, b, _ in batch})
     if len(merges) < n_merges and not pairs_exhausted:
         # token-sharing winners under-filled the batches round after round;
         # a silently short merge table would train an undersized vocabulary
@@ -369,8 +409,12 @@ def learn_bpe_merges(
             f"max_rounds={max_rounds} (token-sharing winners under-fill "
             f"batches); raise max_rounds or lower merge_batch"
         )
-    return spark.createDataFrame(
-        merges, "round long, left_sym string, right_sym string, pair_count long"
+    # a local relation: createDataFrame of a Python list would be an RDD
+    # scan starting a Python worker on every action
+    cols = list(zip(*merges)) or [[], [], [], []]
+    return words.sparkSession.createDataFrame(
+        pa.table(dict(zip(("round", "left_sym", "right_sym", "pair_count"), cols))),
+        "round long, left_sym string, right_sym string, pair_count long",
     )
 
 

@@ -6,7 +6,12 @@ actions (and the plan analysis of every later iteration) start from the
 stored blocks. Which kind a site uses follows one rule:
 
 * lazy (``pin(df)``) when the first action reads the pin through ONE plan
-  branch — that action fills the blocks as a side effect, no extra job;
+  branch — that action fills the blocks as a side effect. A lazy pin does
+  not avoid jobs, it defers the last stage: under AQE, pinning a plan with
+  an exchange runs every shuffle-map stage at pin time (measured: one job
+  for a pin over a ``groupBy``, none over a narrow plan), and only the
+  stage that writes the blocks waits for the first action. Those pin-time
+  jobs run while the DataFrame is being built, like an eager pin's;
 * eager (``pin(df, eager=True)``) when the first action reads it through
   TWO branches (a self-join, a symmetrizing union) — a lazy pin there lets
   both branches compute the same partitions before the blocks exist
@@ -14,7 +19,11 @@ stored blocks. Which kind a site uses follows one rule:
   share the exchange directly below the pin, only the bounded
   post-exchange tail runs twice, and lazy stays the cheaper side;
 * narrow (``pin_narrow``) only on eager pins: once the blocks exist their
-  measured size sets a narrow-coalesced partition count.
+  measured size (``stored_bytes``) sets a narrow-coalesced partition count.
+  A narrow pin of at most one partition's worth of bytes is small enough
+  for the driver: ``collect_if_narrow`` hands it over as one Arrow table
+  and frees the blocks, so an iterative operator can run its rounds
+  in-process instead of one Spark job per round.
 
 A pin's blocks live in the SparkContext's persistent-RDD registry, not in
 the plan cache: ``DataFrame.unpersist`` and ``catalog.clearCache`` leave
@@ -30,10 +39,22 @@ from __future__ import annotations
 
 import contextlib
 import threading
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["pin", "pin_narrow", "release", "release_rdd_blocks", "scope"]
+if TYPE_CHECKING:
+    import pyarrow as pa
+
+__all__ = [
+    "collect_if_narrow",
+    "pin",
+    "pin_narrow",
+    "release",
+    "release_rdd_blocks",
+    "scope",
+    "stored_bytes",
+]
 
 # Per-partition byte target of a narrow pin: an iterative loop re-scans its
 # working set every round, so near-empty partitions pay their task
@@ -66,6 +87,18 @@ def pin(df: DataFrame, *, eager: bool = False, tag: str | None = None) -> DataFr
     return out
 
 
+def stored_bytes(df: DataFrame) -> int | None:
+    """Bytes the pin ``df`` (a ``pin``/``pin_narrow`` result) holds in
+    memory and on disk, read from the storage registry without running a
+    job. ``None`` when the registry does not list the pin: it is lazy and
+    not yet filled, released, or has no partitions."""
+    rid = df._pin_rdd.id()
+    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rid:
+            return info.memSize() + info.diskSize()
+    return None
+
+
 def pin_narrow(df: DataFrame) -> DataFrame:
     """Eager pin, narrow-coalesced to one partition per 32 MB stored.
 
@@ -75,20 +108,35 @@ def pin_narrow(df: DataFrame) -> DataFrame:
     round of an iterative consumer would re-scan dozens of near-empty
     partitions. The blocks already exist, so ``coalesce`` is a narrow
     merge of block reads: no shuffle, upstream parallelism unaffected, and
-    the count comes from the measured stored bytes (a storage-registry
-    lookup, no extra action) — a genuinely large table keeps its width."""
+    the count comes from the measured stored bytes (``stored_bytes``, no
+    extra action) — a genuinely large table keeps its width."""
     out = pin(df, eager=True)
-    rid = out._pin_rdd.id()
-    for info in out.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
-        if info.id() == rid:
-            size = info.memSize() + info.diskSize()
-            cur = info.numCachedPartitions()
-            n = max(1, min(cur, -(-size // _NARROW_PARTITION_BYTES)))
-            if n < cur:
-                narrowed = out.coalesce(n)
-                narrowed._pin_rdd = out._pin_rdd
-                return narrowed
+    size = stored_bytes(out)
+    if size is not None:
+        cur = out._pin_rdd.getNumPartitions()
+        n = max(1, min(cur, -(-size // _NARROW_PARTITION_BYTES)))
+        if n < cur:
+            narrowed = out.coalesce(n)
+            narrowed._pin_rdd = out._pin_rdd
+            return narrowed
     return out
+
+
+def collect_if_narrow(df: DataFrame) -> pa.Table | None:
+    """The rows of the eager pin ``df`` as one Arrow table, when it stores
+    at most one narrow partition (32 MB); the pin is released then.
+    Returns ``None`` and keeps the pin when it is larger or its size is
+    unknown: the decision reads measured bytes only, never the partition
+    count (a pin that is already one partition can be large).
+
+    ``toArrow`` collects through Arrow whatever the session's
+    ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    size = stored_bytes(df)
+    if size is None or size > _NARROW_PARTITION_BYTES:
+        return None
+    table = df.toArrow()
+    release(df)
+    return table
 
 
 def release(df: DataFrame) -> None:

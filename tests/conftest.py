@@ -37,6 +37,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def distributed_regime(monkeypatch):
+    """Run connected components, label propagation and BPE training in
+    their distributed regime: every pin reports a size above the one
+    narrow partition up to which they run their rounds on the driver."""
+    from hiss_cube_spark import pins
+
+    monkeypatch.setattr(
+        pins, "stored_bytes", lambda df: pins._NARROW_PARTITION_BYTES + 1
+    )
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("HCS_TEST_SF_DIR", "/root/testdata/sf0.001")

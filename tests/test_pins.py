@@ -1,8 +1,10 @@
 """Pins (`hiss_cube_spark.pins`) and the iterative operators that free them.
 
 Grouped by operator: the pin primitives, connected components over a
-narrow pin, BPE training's generation release, and the guard that keeps
-every ``localCheckpoint`` in the engine behind `pins`.
+narrow pin, BPE training's generation release, the driver regime that
+leaves no pin, and the guard that keeps every ``localCheckpoint`` in the
+engine behind `pins`. The pin lifecycle of the iterative operators lives in
+their distributed regime (the ``distributed_regime`` fixture).
 """
 
 from __future__ import annotations
@@ -14,8 +16,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame
 
 from hiss_cube_spark.operators.clusters import connected_components
+from hiss_cube_spark.operators.graph import label_propagation
 from hiss_cube_spark.operators.tokenizer import learn_bpe_merges
-from hiss_cube_spark.pins import pin, pin_narrow, release, scope
+from hiss_cube_spark.pins import (
+    collect_if_narrow,
+    pin,
+    pin_narrow,
+    release,
+    scope,
+    stored_bytes,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -42,6 +52,23 @@ def test_pin_narrow_keeps_an_already_narrow_pin(spark):
     out = pin_narrow(df)
     assert out.rdd.getNumPartitions() == 1
     assert out._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+
+def test_collect_if_narrow_decides_on_stored_bytes(spark, monkeypatch):
+    from hiss_cube_spark import pins
+
+    df = spark.range(300).repartition(1)
+    before = _live_rdds(spark)
+    p = pin_narrow(df)
+    assert 0 < stored_bytes(p) <= pins._NARROW_PARTITION_BYTES
+    # one partition, but reported above the bound: stays pinned
+    monkeypatch.setattr(pins, "stored_bytes", lambda d: pins._NARROW_PARTITION_BYTES + 1)
+    assert collect_if_narrow(p) is None
+    assert _live_rdds(spark) - before
+    monkeypatch.undo()
+    table = collect_if_narrow(p)
+    assert sorted(table.column("id").to_pylist()) == list(range(300))
+    assert _live_rdds(spark) <= before
 
 
 def test_release_removes_the_pinned_rdd(spark):
@@ -77,7 +104,7 @@ def test_scope_releases_only_the_pins_made_inside(spark):
 # -- connected components ----------------------------------------------------
 
 
-def test_connected_components_identical_after_narrow_pin(spark):
+def test_connected_components_identical_after_narrow_pin(spark, distributed_regime):
     # two chains + a singleton pair, emitted wide so the edge pin has
     # many near-empty partitions before it is narrowed inside CC
     rows = [(1, 2), (2, 3), (10, 11), (11, 12), (20, 21)]
@@ -98,7 +125,7 @@ def test_connected_components_identical_after_narrow_pin(spark):
 # -- BPE training ------------------------------------------------------------
 
 
-def test_learn_bpe_merges_leaves_no_generation_pinned(spark):
+def test_learn_bpe_merges_leaves_no_generation_pinned(spark, distributed_regime):
     words = spark.createDataFrame(
         [("abab", 5), ("abc", 3), ("bc", 2)], "word string, f long"
     )
@@ -109,10 +136,10 @@ def test_learn_bpe_merges_leaves_no_generation_pinned(spark):
     assert _live_rdds(spark) <= before
 
 
-def test_learn_bpe_merges_honours_spark_default_aqe(spark, monkeypatch):
-    """With ``spark.sql.adaptive.enabled`` unset, Spark's built-in default
-    (on) applies, so the trainer relies on AQE sizing and never adds an
-    explicit repartition."""
+def test_learn_bpe_merges_honours_spark_default_aqe(spark, monkeypatch, distributed_regime):
+    """With ``spark.sql.adaptive.enabled`` unset the trainer still never
+    adds an explicit repartition: the narrow pin sizes its word table by
+    measured bytes, with AQE on or off."""
     calls = []
     real = DataFrame.repartition
 
@@ -131,6 +158,31 @@ def test_learn_bpe_merges_honours_spark_default_aqe(spark, monkeypatch):
         spark.conf.set(key, old)
     assert len(got) == 2
     assert calls == []
+
+
+# -- driver regime -----------------------------------------------------------
+
+
+def test_driver_regime_leaves_no_pin(spark):
+    """Below one narrow partition CC, LPA and BPE collect their working
+    set, release its pin and return a local relation: no block outlives
+    the call."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (10, 11)], "doc_a long, doc_b long"
+    ).repartition(8)
+    words = spark.createDataFrame(
+        [("abab", 5), ("abc", 3), ("bc", 2)], "word string, f long"
+    )
+    before = _live_rdds(spark)
+    results = [
+        connected_components(pairs),
+        label_propagation(pairs, src_col="doc_a", dst_col="doc_b"),
+        learn_bpe_merges(words, n_merges=3),
+    ]
+    for df in results:
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+        assert df.count() > 0
+    assert _live_rdds(spark) <= before
 
 
 # -- guard -------------------------------------------------------------------

@@ -86,9 +86,24 @@ def test_interleave_bits_bijective(a, b):
     assert (ra, rb) == (a, b)
 
 
+# keywords the parser treats specially: END ends the header, COMMENT and
+# HISTORY are commentary cards with no value
+_RESERVED_KEYS = ("END", "COMMENT", "HISTORY")
+
+
+def _header_cards(items) -> bytes:
+    """``KEY = value`` cards, then the END card, padded to a 2880-byte block."""
+    cards = b""
+    for k, v in items:
+        cards += f"{k:<8}= {v:>20}".ljust(80).encode()
+    cards += "END".ljust(80).encode()
+    return cards + b" " * ((-len(cards)) % 2880)
+
+
 @given(
     keys=st.lists(
-        st.text(alphabet="ABCDEFGHIJKLMNOPQRSTUVWXYZ", min_size=1, max_size=8),
+        st.text(alphabet="ABCDEFGHIJKLMNOPQRSTUVWXYZ", min_size=1, max_size=8)
+        .filter(lambda k: k not in _RESERVED_KEYS),
         min_size=1, max_size=10, unique=True,
     ),
     vals=st.lists(st.integers(-10**8, 10**8), min_size=10, max_size=10),
@@ -96,14 +111,18 @@ def test_interleave_bits_bijective(a, b):
 @settings(max_examples=50, deadline=None)
 def test_fits_header_roundtrip(keys, vals):
     """Any header our card writer emits, our parser reads back."""
-    cards = b""
-    for k, v in zip(keys, vals):
-        cards += f"{k:<8}= {v:>20}".ljust(80).encode()
-    cards += "END".ljust(80).encode()
-    cards += b" " * ((-len(cards)) % 2880)
-    hdr = parse_fits_header(cards)
+    hdr = parse_fits_header(_header_cards(zip(keys, vals)))
     for k, v in zip(keys, vals):
         assert hdr[k] == v
+
+
+def test_fits_header_stops_at_end_card():
+    """``END`` ends the header even mid-block: cards after it are not read,
+    and ``COMMENT``/``HISTORY`` cards carry no value."""
+    hdr = parse_fits_header(
+        _header_cards([("A", 1), ("COMMENT", 2), ("HISTORY", 3), ("END", 4), ("B", 5)])
+    )
+    assert hdr == {"A": 1}
 
 
 @given(

@@ -346,7 +346,7 @@ def test_woe_iv_binning_hand_computed(spark):
     assert got[2]["woe"] == round(w2, 6)
 
 
-def test_bpe_checkpointed_generation_survives_recompute(spark):
+def test_bpe_checkpointed_generation_survives_recompute(spark, distributed_regime):
     """ADVICE r12: releasing a pinned generation deletes the blocks its
     truncated lineage depends on, so a generation may go only once its
     successor is materialized. With every generation pinned the merge

@@ -3,11 +3,14 @@
 refactors (each stage is also runnable alone; see each tool's docstring).
 
 Usage: python tools/regress.py [--quick]
-  --quick skips the (slow) full pytest suite and runs the other three
-  stages only.
+  --quick replaces the (slow) full pytest suite with its regime module
+  (tests/test_regimes.py) and runs the other stages as usual.
 
-Stages (all run from /tmp to catch closure-serialization bugs):
-  1. pytest tests/ -q                        (~7 min)
+Stages (all but pytest run from /tmp to catch closure-serialization bugs):
+  1. pytest tests/ -q                        (~25 min)
+     --quick: pytest tests/test_regimes.py   (~2 min; connected components,
+     label propagation and BPE in both regimes — the sf0.01 inputs of
+     parity only reach their driver regime)
   2. tools/parity_full.py at sf0.01          (~4 min, every registered query)
   3. tools/ansi_smoke.py at sf0.001          (~3 min, strict semantics)
   4. bench.py at $SPARK_GRAFT_SF_DIR         (~2 min, one JSON line)
@@ -39,8 +42,8 @@ def run(name: str, cmd: list[str], cwd: str = "/tmp") -> bool:
 def main() -> None:
     quick = "--quick" in sys.argv
     results = []
-    if not quick:
-        results.append(run("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"], cwd=REPO))
+    tests = "tests/test_regimes.py" if quick else "tests/"
+    results.append(run("pytest", [sys.executable, "-m", "pytest", tests, "-q"], cwd=REPO))
     results.append(run("lazy-import lint", [sys.executable, f"{REPO}/tools/lint_lazy_imports.py", REPO]))
     # r9 lesson (w_rolling_distinct): a new lazy re-derivation must not
     # land silently — the audit is cheap next to parity
