@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from hiss_cube_spark.pins import collect_if_narrow, pin, pin_narrow
+from hiss_cube_spark.pins import collect_if_narrow, pin, pin_narrow, release
 
 __all__ = ["pagerank", "triangle_count", "bfs_hops", "label_propagation"]
 
@@ -263,8 +263,10 @@ def label_propagation(
     * distributed — above that, per round one shuffle join (edges ⋈
       labels on the neighbor key), one map-side-combining (node, label)
       count, one per-node argmax window over that bounded count table —
-      the same per-round cost envelope as `connected_components`, with the
-      same pinned lineage cut per round.
+      the same per-round cost envelope as `connected_components`. Each
+      round's labels are an eager pin; once it is stored the previous
+      round's pin is released, and the edge pins go on return, so only
+      the result's pin stays.
 
     Edges with a null end or equal ends are dropped in both.
 
@@ -296,14 +298,20 @@ def label_propagation(
         "node", F.col("node").alias("label")
     )
     w = Window.partitionBy("node").orderBy(F.desc("_n"), F.asc("label"))
-    for _ in range(iterations):
-        labels = pin(
+    for i in range(iterations):
+        prev, labels = labels, pin(
             und.join(labels.withColumnRenamed("node", "b"), "b")
             .select(F.col("a").alias("node"), "label")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("_n"))
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .select("node", "label")
+            .select("node", "label"),
+            eager=True,
         )
+        if i:  # this round's blocks exist: nothing reads the last round's
+            release(prev)
+    if iterations:  # the last round's pin holds the result, not the edges
+        release(de)
+        release(und)
     return labels.select("node", F.col("label").alias("community"))

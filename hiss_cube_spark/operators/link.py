@@ -62,11 +62,18 @@ def build_cutout_refs(
     # spectrum at the original resolution, config.ini:36).
     m = cap_matches_per_probe(m, probe_key="p_spec_id", order_col="t_image_id", max_refs=max_refs)
 
-    per_zoom = []
+    # Each zoom's cutout corner is read four times (both bounds, both
+    # wholeness tests). One projection computes it once; Catalyst does not
+    # collapse a projection whose non-trivial outputs are read more than
+    # once, so the WCS arithmetic appears once per zoom in the plan.
+    corner, per_zoom = {}, []
     for z in range(zooms):
         wcs_z = rescale_wcs_for_zoom(F.col("t_wcs"), z)
         size = max(cutout_size >> z, 1)
-        x0, x1, y0, y1 = cutout_bounds(wcs_z, F.col("p_ra"), F.col("p_dec"), size)
+        x, _, y, _ = cutout_bounds(wcs_z, F.col("p_ra"), F.col("p_dec"), size)
+        corner[f"_x{z}"], corner[f"_y{z}"] = x, y
+        x0, y0 = F.col(f"_x{z}"), F.col(f"_y{z}")
+        x1, y1 = x0 + size, y0 + size
         n1 = (F.col("t_naxis1") / F.lit(1 << z)).cast("int")
         n2 = (F.col("t_naxis2") / F.lit(1 << z)).cast("int")
         per_zoom.append(
@@ -80,7 +87,8 @@ def build_cutout_refs(
             )
         )
     return (
-        m.withColumn("_z", F.explode(F.array(*per_zoom)))
+        m.withColumns(corner)
+        .withColumn("_z", F.explode(F.array(*per_zoom)))
         .where(F.col("_z.whole"))
         .select(
             F.col("p_spec_id").alias("spec_id"),

@@ -79,6 +79,11 @@ class CubePipeline:
         #: image_count/spectrum_count file attrs, utils/io.py:183-199 —
         #: observed on the write pass itself, no extra count() job).
         self.stats: dict[str, int] = {}
+        #: one DataFrame per warehouse table (`read`), and the zoom-0 frame
+        #: bytes read from the ``images`` entry (`_frame_row_bytes`); both
+        #: are forgotten when the pipeline rewrites the table
+        self._tables: dict[str, DataFrame] = {}
+        self._frame_bytes: dict[str, int | None] = {}
 
     # -- table IO ----------------------------------------------------------
 
@@ -86,12 +91,25 @@ class CubePipeline:
         return os.path.join(self.warehouse, table)
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        """The table's DataFrame, made once per pipeline: every
+        ``spark.read.parquet`` lists the table's files and fires a job
+        that reads their footers for the schema, and a build reads the
+        bronze tables in three phases. The entry is dropped whenever the
+        pipeline writes that table (`_forget`), so a later read sees the
+        new files, never a stale listing."""
+        if table not in self._tables:
+            self._tables[table] = self.spark.read.parquet(self.path(table))
+        return self._tables[table]
+
+    def _forget(self, table: str) -> None:
+        self._tables.pop(table, None)
+        self._frame_bytes.pop(table, None)
 
     def _write_observed(
         self, df: DataFrame, table: str, parts: list[str]
     ) -> None:
         """Write + record the row count observed on the same pass (A3/A7)."""
+        self._forget(table)
         obs = Observation(table)
         w = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         writer = w.write.mode("overwrite")
@@ -113,23 +131,36 @@ class CubePipeline:
         it, a 100 TB ingest catastrophically so. Ranges additionally
         give files DISJOINT healpix intervals per zoom, so min/max
         stats prune spatial scans file-by-file (hash gives every file
-        the full healpix range)."""
-        w = df
+        the full healpix range).
+
+        The range count is an initial width, not a fixed one: the write
+        starts from at least 64 ranges (array-heavy bronze rows are MBs
+        each, so tasks stay well under executor memory) and AQE merges
+        adjacent ranges by the bytes it sees. A merged neighbour is still
+        one contiguous range, so the disjoint intervals hold; at galaxy
+        scale every range is above the advisory size and none merges,
+        while the toy corpora stop writing one file per empty range. An
+        explicit count would pin the width: AQE never coalesces it."""
         parts = partition_by if partition_by is not None else (
             ["zoom"] if "zoom" in df.columns else []
         )
-        if "healpix" in df.columns:
-            cols = [F.col(c) for c in parts] + [F.col("healpix")]
-            n = max(
-                int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-                self.spark.sparkContext.defaultParallelism,
-                64,  # floor: array-heavy bronze rows are MBs each — keep
-                #      tasks well under executor memory even at toy SF
-            )
-            w = w.repartitionByRange(n, *cols).sortWithinPartitions(
-                *parts, "healpix"
-            )
-        self._write_observed(w, table, parts)
+        if "healpix" not in df.columns:
+            self._write_observed(df, table, parts)
+            return
+        n = str(max(
+            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+            self.spark.sparkContext.defaultParallelism,
+            64,
+        ))
+        cols = [F.col(c) for c in parts] + [F.col("healpix")]
+        w = df.repartitionByRange(*cols).sortWithinPartitions(*parts, "healpix")
+        # initialPartitionNum sets the width AQE coalesces from; with AQE
+        # off, shuffle.partitions sets it and nothing merges
+        with self._session_conf({
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum": n,
+            "spark.sql.shuffle.partitions": n,
+        }):
+            self._write_observed(w, table, parts)
 
     #: per-task byte budget for one vectorized-parquet batch of frame rows
     #: (sized so 32 concurrent local tasks stay well inside the driver heap;
@@ -137,6 +168,22 @@ class CubePipeline:
     _VECTOR_BATCH_TARGET_BYTES = 128 << 20
 
     @contextlib.contextmanager
+    def _session_conf(self, conf: dict[str, str]):
+        """Set session confs around the actions inside the block, then put
+        back what was there: the value set before, or Spark's default
+        where none was. Spark has no per-query override for these."""
+        prev = {k: self.spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            self.spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    self.spark.conf.unset(k)
+                else:
+                    self.spark.conf.set(k, v)
+
     def _bounded_batches(self, est_row_bytes: int):
         """Vectorized-parquet batches sized in BYTES, not rows.
 
@@ -147,33 +194,29 @@ class CubePipeline:
         for a 2048×1489 SDSS frame), so one default batch would reserve
         ~100 GB per column vector and OOM any executor, at ANY cluster
         size. Clamp the row budget to [4, 4096] from the caller's row
-        byte estimate. Spark has no per-scan override, so set + restore
-        the session conf around the phase's actions.
+        byte estimate, set around the phase's actions.
         """
-        key = "spark.sql.parquet.columnarReaderBatchSize"
         batch = min(4096, max(4, self._VECTOR_BATCH_TARGET_BYTES // est_row_bytes))
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, str(batch))
-        try:
-            yield
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
+        return self._session_conf(
+            {"spark.sql.parquet.columnarReaderBatchSize": str(batch)}
+        )
 
     def _frame_row_bytes(self) -> int | None:
         """data+errors bytes of the largest zoom-0 frame (one column-pruned
-        scalar lookup against bronze), or None on an empty table."""
-        row = (
-            self.read("images")
-            .where(F.col("zoom") == 0)
-            .agg(F.max("naxis1").alias("w"), F.max("naxis2").alias("h"))
-            .head()
-        )
-        if row is None or row["w"] is None:
-            return None
-        return 8 * int(row["w"]) * int(row["h"])
+        scalar lookup against bronze, made once per written ``images``),
+        or None on an empty table."""
+        if "images" not in self._frame_bytes:
+            row = (
+                self.read("images")
+                .where(F.col("zoom") == 0)
+                .agg(F.max("naxis1").alias("w"), F.max("naxis2").alias("h"))
+                .head()
+            )
+            self._frame_bytes["images"] = (
+                None if row is None or row["w"] is None
+                else 8 * int(row["w"]) * int(row["h"])
+            )
+        return self._frame_bytes["images"]
 
     @contextlib.contextmanager
     def _frame_bounded_batches(self):
@@ -222,6 +265,7 @@ class CubePipeline:
             # filter column, not a partition dir, on this table. A
             # 16 MB row group bounds each writer's buffer to
             # ~32 tile rows.
+            self._forget("image_tiles")
             obs = Observation("image_tiles")
             w = t.observe(obs, F.count(F.lit(1)).alias("rows"))
             w.write.mode("overwrite").option(

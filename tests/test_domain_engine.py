@@ -4,11 +4,14 @@ phases, exports, FITS source self-consistency."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tests.astro_fixtures import (
@@ -71,6 +74,95 @@ def test_link_refs(refs, spectra):
         (F.col("x_max") - F.col("x_min") != CUTOUT) | (F.col("y_max") - F.col("y_min") != CUTOUT)
     ).count()
     assert bad == 0
+
+
+_WCS_CASE = st.fixed_dictionaries({
+    # spectrum position; the image centre and crval sit within 0.05° of it
+    "dec": st.floats(-60, 60),
+    "d_img": st.tuples(st.floats(-0.04, 0.04), st.floats(-0.04, 0.04)),
+    "d_crval": st.tuples(st.floats(-0.05, 0.05), st.floats(-0.05, 0.05)),
+    "naxis": st.tuples(st.integers(8, 2048), st.integers(8, 2048)),
+    "crpix": st.tuples(st.floats(-50, 2100), st.floats(-50, 2100)),
+    # deg/px of either sign, kept off zero so float32 rounding cannot make
+    # the determinant vanish
+    "cd": st.tuples(*[st.floats(1e-5, 1e-3) | st.floats(-1e-3, -1e-5)] * 4)
+    .filter(lambda c: abs(c[0] * c[3] - c[1] * c[2]) > 1e-10),
+})
+
+
+def _numpy_cutout_refs(cases, wcs_type: str, cutout_size: int, zooms: int) -> set:
+    """The link's bounds in numpy float64, in the engine's operation order:
+    crpix/2^z + (cd2_2·2^z·Δra − cd1_2·2^z·Δdec)/det_z, then floor − half."""
+    to = np.float32 if wcs_type == "float" else np.float64
+    out = set()
+    for i, c in enumerate(cases):
+        ra, dec = np.float64(5.0 + 3.0 * i), np.float64(c["dec"])
+        crpix1, crpix2, cd11, cd12, cd21, cd22 = (
+            np.float64(to(v)) for v in (*c["crpix"], *c["cd"])
+        )
+        crval1 = np.float64(to(ra + c["d_crval"][0]))
+        crval2 = np.float64(to(dec + c["d_crval"][1]))
+        for z in range(zooms):
+            f = np.float64(1 << z)
+            size = max(cutout_size >> z, 1)
+            a11, a12, a21, a22 = cd11 * f, cd12 * f, cd21 * f, cd22 * f
+            det = a11 * a22 - a12 * a21
+            dra, ddec = ra - crval1, dec - crval2
+            x = crpix1 / f + (a22 * dra - a12 * ddec) / det
+            y = crpix2 / f + (a11 * ddec - a21 * dra) / det
+            x0 = int(np.floor(x)) - size // 2
+            y0 = int(np.floor(y)) - size // 2
+            n1, n2 = int(c["naxis"][0] / f), int(c["naxis"][1] / f)
+            if x0 >= 0 and y0 >= 0 and x0 + size <= n1 and y0 + size <= n2:
+                out.add((i, 100 + i, z, x0, x0 + size, y0, y0 + size))
+    return out
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    cases=st.lists(_WCS_CASE, min_size=1, max_size=6),
+    wcs_type=st.sampled_from(["float", "double"]),
+    cutout_size=st.integers(1, 96),
+)
+def test_link_bounds_match_numpy_float64(spark, cases, wcs_type, cutout_size):
+    """`build_cutout_refs`' per-zoom bounds and wholeness filter equal a
+    float64 evaluation of the same operation order, bit for bit, over
+    random linear WCS (non-singular CD), positions, cutout sizes and zooms
+    0–4. Each spectrum matches only its own image (3° apart)."""
+    from hiss_cube_spark.operators.link import build_cutout_refs
+
+    spectra = spark.createDataFrame(
+        [(i, 5.0 + 3.0 * i, c["dec"]) for i, c in enumerate(cases)],
+        "spec_id long, plug_ra double, plug_dec double",
+    )
+    t = wcs_type
+    images = spark.createDataFrame(
+        [
+            (
+                100 + i, 5.0 + 3.0 * i + c["d_img"][0], c["dec"] + c["d_img"][1],
+                "r", 6166, *c["naxis"],
+                (*c["crpix"], *c["cd"], 5.0 + 3.0 * i + c["d_crval"][0],
+                 c["dec"] + c["d_crval"][1], "RA---TAN", "DEC--TAN"),
+                0.0,
+            )
+            for i, c in enumerate(cases)
+        ],
+        "image_id long, ra double, dec double, band string, wl int, "
+        "naxis1 int, naxis2 int, "
+        f"wcs struct<crpix1:{t}, crpix2:{t}, cd1_1:{t}, cd1_2:{t}, cd2_1:{t}, "
+        f"cd2_2:{t}, crval1:{t}, crval2:{t}, ctype1:string, ctype2:string>, "
+        "tai_time double",
+    )
+    refs = build_cutout_refs(
+        spectra, images, match_radius_deg=0.1, zooms=ZOOMS, cutout_size=cutout_size
+    )
+    got = {
+        tuple(r)
+        for r in refs.select(
+            "spec_id", "image_id", "zoom", "x_min", "x_max", "y_min", "y_max"
+        ).collect()
+    }
+    assert got == _numpy_cutout_refs(cases, wcs_type, cutout_size, ZOOMS)
 
 
 def test_cutout_dereference_shape(refs, images):
@@ -157,7 +249,18 @@ def test_sfr_join(spark, spectra):
     assert merged.where(F.col("MEDIAN").isNull()).count() == 4
 
 
-def test_pipeline_phases(spark, images, spectra, tmp_path_factory):
+@pytest.fixture(scope="module")
+def built(spark, images, spectra, tmp_path_factory):
+    """(pipeline, warehouse) after one full ``create`` with both exports."""
+    from hiss_cube_spark.plans.pipeline import CubePipeline
+
+    wh = str(tmp_path_factory.mktemp("warehouse"))
+    pipe = CubePipeline(spark, wh, match_radius_deg=0.01, cutout_size=CUTOUT)
+    pipe.create(images, spectra, export="both", export_zoom=3)
+    return pipe, wh
+
+
+def test_pipeline_phases(spark, built):
     """End-to-end cardinality laws through the full ingest→link→gold chain,
     the fixture-scale analog of the reference's pinned galaxy_small counts
     (visualization cube 276,100 rows @ zoom 0 / 9,867 @ zoom 3, ML cube
@@ -165,11 +268,7 @@ def test_pipeline_phases(spark, images, spectra, tmp_path_factory):
     test_export.py:63,92,98-99). Every expected count is DERIVED from the
     fixture constants, so any regression in the chain's row accounting
     (dropped refs, duplicated pixels, zoom ladder off-by-one) fails here."""
-    from hiss_cube_spark.plans.pipeline import CubePipeline
-
-    wh = str(tmp_path_factory.mktemp("warehouse"))
-    pipe = CubePipeline(spark, wh, match_radius_deg=0.01, cutout_size=CUTOUT)
-    pipe.create(images, spectra, export="both", export_zoom=3)
+    pipe, wh = built
 
     n_fields = 37
     n_bands = len(BANDS)
@@ -221,6 +320,79 @@ def test_pipeline_phases(spark, images, spectra, tmp_path_factory):
     hdr, pos = read_fits_bytes_header(blob, 0)
     hdr2, _ = read_fits_bytes_header(blob, pos)
     assert hdr2["XTENSION"] == "BINTABLE" and hdr2["NAXIS2"] > 0
+
+
+def test_bronze_files_hold_disjoint_healpix_ranges(built):
+    """The bronze range write's layout: within each ``zoom=`` directory
+    the files' healpix min/max intervals (parquet footer statistics) are
+    pairwise disjoint, so spatial scans prune file by file, and AQE merged
+    the toy corpus' near-empty ranges below the 64 the write starts from."""
+    import pyarrow.parquet as pq
+
+    _, wh = built
+    for table in ("images", "spectra"):
+        n_files = 0
+        for zdir in sorted(glob.glob(os.path.join(wh, table, "zoom=*"))):
+            spans = []
+            for f in sorted(glob.glob(os.path.join(zdir, "*.parquet"))):
+                meta = pq.ParquetFile(f).metadata
+                col = meta.schema.to_arrow_schema().get_field_index("healpix")
+                stats = [meta.row_group(g).column(col).statistics for g in range(meta.num_row_groups)]
+                spans.append((min(st.min for st in stats), max(st.max for st in stats)))
+            spans.sort()
+            assert spans, zdir
+            assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), (zdir, spans)
+            n_files += len(spans)
+        assert n_files < 64, (table, n_files)
+
+
+def test_bronze_write_restores_session_confs(spark, tmp_path):
+    """The range write sets its initial width for the write only: a value
+    the session had set comes back, and a key it had not set is unset."""
+    from hiss_cube_spark.plans.pipeline import CubePipeline
+
+    init = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    shuffle = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(shuffle)
+    df = spark.createDataFrame(
+        [(z, h) for z in range(2) for h in range(20)], "zoom int, healpix long"
+    )
+    pipe = CubePipeline(spark, str(tmp_path))
+    spark.conf.unset(init)
+    pipe.write_bronze(df, "t")
+    assert spark.conf.get(init, None) is None
+    spark.conf.set(init, "77")
+    try:
+        pipe.write_bronze(df, "t")
+        assert spark.conf.get(init) == "77"
+    finally:
+        spark.conf.unset(init)
+    assert spark.conf.get(shuffle) == before
+    assert pipe.read("t").count() == 40
+
+
+def test_pipeline_read_sees_a_rewritten_table(spark, built, tmp_path_factory):
+    """`CubePipeline.read` keeps one DataFrame per table and forgets it
+    when the pipeline rewrites that table: a link re-run with a lower cap
+    is what the next read returns. (Every fixture spectrum sits on its
+    field centre, so a smaller match radius would match the same rows; a
+    cap of 2 refs per spectrum changes the count.)"""
+    import shutil
+
+    from hiss_cube_spark.plans.pipeline import CubePipeline
+
+    _, src = built
+    wh = str(tmp_path_factory.mktemp("warehouse_relink"))
+    for t in ("images", "spectra"):
+        shutil.copytree(os.path.join(src, t), os.path.join(wh, t))
+    pipe = CubePipeline(spark, wh, match_radius_deg=0.01, cutout_size=CUTOUT)
+    pipe.phase_link()
+    assert pipe.read("cutout_refs").count() == N_SPECTRA * len(BANDS) * ZOOMS
+    assert pipe.read("cutout_refs") is pipe.read("cutout_refs")
+    pipe.max_refs = 2
+    pipe.phase_link()
+    assert pipe.read("cutout_refs").count() == N_SPECTRA * 2 * ZOOMS
+    assert pipe.stats["cutout_refs"] == N_SPECTRA * 2 * ZOOMS
 
 
 def test_exports_roundtrip(spark, tmp_path_factory):

@@ -1,8 +1,8 @@
 """Pins (`hiss_cube_spark.pins`) and the iterative operators that free them.
 
 Grouped by operator: the pin primitives, connected components over a
-narrow pin, BPE training's generation release, the driver regime that
-leaves no pin, and the guard that keeps every ``localCheckpoint`` in the
+narrow pin, BPE training's generation release, the pins CC, LPA and BPE
+leave in each regime, and the guard that keeps every ``localCheckpoint`` in the
 engine behind `pins`. The pin lifecycle of the iterative operators lives in
 their distributed regime (the ``distributed_regime`` fixture).
 """
@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame
 
@@ -160,29 +161,37 @@ def test_learn_bpe_merges_honours_spark_default_aqe(spark, monkeypatch, distribu
     assert calls == []
 
 
-# -- driver regime -----------------------------------------------------------
+# -- both regimes ------------------------------------------------------------
 
 
-def test_driver_regime_leaves_no_pin(spark):
-    """Below one narrow partition CC, LPA and BPE collect their working
-    set, release its pin and return a local relation: no block outlives
-    the call."""
+@pytest.mark.parametrize("regime", ["driver", "distributed"])
+def test_iterative_operators_release_their_pins(spark, request, regime):
+    """CC, LPA and BPE free every pin they make but the one their result
+    reads. Below one narrow partition they collect their working set and
+    return a local relation, so no block outlives the call; above it the
+    last label pin of CC and LPA holds the result, and BPE's merge table
+    is local in both."""
+    if regime == "distributed":
+        request.getfixturevalue("distributed_regime")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (10, 11)], "doc_a long, doc_b long"
     ).repartition(8)
     words = spark.createDataFrame(
         [("abab", 5), ("abc", 3), ("bc", 2)], "word string, f long"
     )
-    before = _live_rdds(spark)
-    results = [
-        connected_components(pairs),
-        label_propagation(pairs, src_col="doc_a", dst_col="doc_b"),
-        learn_bpe_merges(words, n_merges=3),
-    ]
-    for df in results:
-        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
-        assert df.count() > 0
-    assert _live_rdds(spark) <= before
+    runs = {
+        "cc": lambda: connected_components(pairs),
+        "lpa": lambda: label_propagation(pairs, src_col="doc_a", dst_col="doc_b"),
+        "bpe": lambda: learn_bpe_merges(words, n_merges=3),
+    }
+    result_pins = {"cc": 1, "lpa": 1, "bpe": 0} if regime == "distributed" else {}
+    for name, run in runs.items():
+        before = _live_rdds(spark)
+        df = run()
+        if regime == "driver":
+            assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+        assert df.count() > 0, name
+        assert len(_live_rdds(spark) - before) == result_pins.get(name, 0), name
 
 
 # -- guard -------------------------------------------------------------------

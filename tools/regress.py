@@ -13,7 +13,9 @@ Stages (all but pytest run from /tmp to catch closure-serialization bugs):
      parity only reach their driver regime)
   2. tools/parity_full.py at sf0.01          (~4 min, every registered query)
   3. tools/ansi_smoke.py at sf0.001          (~3 min, strict semantics)
-  4. bench.py at $SPARK_GRAFT_SF_DIR         (~2 min, one JSON line)
+  4. bench.py at $SPARK_GRAFT_SF_DIR         (~2 min, one JSON line; its
+     record goes to /tmp/hcs_regress_bench_last.json, not the committed
+     bench_last.json)
 """
 
 from __future__ import annotations
@@ -26,10 +28,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(name: str, cmd: list[str], cwd: str = "/tmp") -> bool:
+def run(name: str, cmd: list[str], cwd: str = "/tmp", env: dict | None = None) -> bool:
     t0 = time.time()
     proc = subprocess.run(
-        cmd, cwd=cwd, capture_output=True, text=True, timeout=1800
+        cmd, cwd=cwd, capture_output=True, text=True, timeout=1800,
+        env={**os.environ, **(env or {})},
     )
     ok = proc.returncode == 0
     tail = "\n".join((proc.stdout or "").strip().splitlines()[-3:])
@@ -50,7 +53,10 @@ def main() -> None:
     results.append(run("scan-audit", [sys.executable, f"{REPO}/tools/scan_audit.py", "/root/testdata/sf0.01", "3", "--gate"]))
     results.append(run("parity", [sys.executable, f"{REPO}/tools/parity_full.py", "/root/testdata/sf0.01"]))
     results.append(run("ansi", [sys.executable, f"{REPO}/tools/ansi_smoke.py", "/root/testdata/sf0.001"]))
-    results.append(run("bench", [sys.executable, f"{REPO}/bench.py"]))
+    # the bench's own record goes to a side file: the committed
+    # bench_last.json is the full-scale baseline, not this gate's run
+    results.append(run("bench", [sys.executable, f"{REPO}/bench.py"],
+                       env={"HCS_BENCH_RECORD": "/tmp/hcs_regress_bench_last.json"}))
     print("=" * 40)
     print("ALL PASS" if all(results) else "FAILURES PRESENT")
     sys.exit(0 if all(results) else 1)
