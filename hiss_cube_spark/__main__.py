@@ -35,6 +35,9 @@ CSV lists (S2/S3): ``--image-list`` rows (run, camcol, field) and
 (processors/metadata.py:132-160) matched against the recursive file
 listing; only matched paths are scanned. The matched-path collect is
 bounded by the user's list size — an explicit enumeration, not a corpus.
+
+Run in-process under an active SparkSession, the CLI uses that session as
+configured: it neither reconfigures nor stops it.
 """
 
 from __future__ import annotations
@@ -277,9 +280,13 @@ def main(argv: list[str] | None = None) -> int:
     build_ml = cfg.create_ml_cube is not False
     build_viz = cfg.create_visualization_cube is not False
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark("hiss-cube-cli")
-    spark.sparkContext.setLogLevel("WARN")
+    # a caller's session is the caller's: get_spark's getOrCreate would
+    # rewrite its runtime SQL options, setLogLevel its log level
+    spark = SparkSession.getActiveSession()
+    owns_session = spark is None
+    if owns_session:
+        spark = get_spark("hiss-cube-cli")
+        spark.sparkContext.setLogLevel("WARN")
     pipe = CubePipeline(
         spark,
         args.output_path,

@@ -24,6 +24,11 @@ def get_spark(
     On a real cluster ``master``/``shuffle_partitions`` come from the
     deployment; locally we default to ``local[$SPARK_GRAFT_CPUS]`` and one
     shuffle partition per core (AQE coalesces further at runtime).
+
+    On an already running session ``getOrCreate`` applies the runtime SQL
+    options below to it (shuffle partitions, time zone, Arrow batch size,
+    AQE). A caller that must not change someone else's session takes
+    ``SparkSession.getActiveSession()`` instead.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"

@@ -78,6 +78,31 @@ def test_bulk_ingest_and_cli(spark, tmp_path_factory):
     assert os.path.isdir(os.path.join(wh, "images", "zoom=0"))
 
 
+def test_cli_keeps_caller_session_conf(spark, tmp_path_factory):
+    """Run in-process under the caller's session, the CLI uses that session
+    as configured: its shuffle width and time zone survive a create. Both
+    are set unlike what get_spark would give ($SPARK_GRAFT_CPUS, UTC)."""
+    from hiss_cube_spark.__main__ import main
+
+    src = str(tmp_path_factory.mktemp("frames_conf"))
+    for i, band in enumerate(["u", "g", "r"]):
+        _write_fits(os.path.join(src, f"frame-{band}-{i:06d}.fits"), band=band)
+    wh = str(tmp_path_factory.mktemp("wh_conf"))
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    saved = {k: spark.conf.get(k) for k in keys}
+    width = "3" if os.environ.get("SPARK_GRAFT_CPUS") != "3" else "5"
+    wanted = {keys[0]: width, keys[1]: "America/Chicago"}
+    try:
+        for k, v in wanted.items():
+            spark.conf.set(k, v)
+        assert main([src, wh, "create"]) == 0
+        assert {k: spark.conf.get(k) for k in keys} == wanted
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def _write_spec_fits(path: str, n: int = 200, plate: int = 3000,
                      ra: float = 30.0, dec: float = 10.0) -> None:
     def card(k, v):
